@@ -66,11 +66,7 @@ object Bench {
     */
   private def pipelineWall(cores: Int, inputDir: String, shufflePartitions: Int): (Long, Double, Double) = {
     val spark = Sessions.local(cores, s"graft-bench-$cores", Some(shufflePartitions))
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) cpuNanos.addAndGet(te.taskMetrics.executorCpuTime)
-    })
+    val metrics = TaskMetrics.attach(spark)
     try {
       val transcripts = spark.read.parquet(inputDir)
       val nTurns = transcripts.count()
@@ -78,7 +74,7 @@ object Bench {
       val res = Dedup.run(spark, transcripts, Dedup.Config())
       res.clusters.write.mode("overwrite").format("noop").save()
       res.pairs.write.mode("overwrite").format("noop").save()
-      (nTurns, (System.nanoTime() - t0) / 1e9, cpuNanos.get() / 1e9)
+      (nTurns, (System.nanoTime() - t0) / 1e9, metrics.totals.cpuS)
     } finally spark.stop()
   }
 
@@ -87,7 +83,7 @@ object Bench {
     * time across hours; reporting the probe with every bench run makes
     * numbers comparable across windows.
     */
-  private[graft] def memBandwidthProbe(threads: Int = 4): Double = {
+  private def memBandwidthProbe(threads: Int = 4): Double = {
     val n = 16 * 1024 * 1024 // 128MB of longs per thread
     val sums = new java.util.concurrent.atomic.AtomicLong
     val arrays = Array.fill(threads)(Array.tabulate(n)(_.toLong))
@@ -109,81 +105,6 @@ object Bench {
     val sec = (System.nanoTime() - t0) / 1e9
     if (sums.get() == 42) println("") // defeat dead-code elimination
     threads * 4.0 * n * 8 / sec / 1e6 // aggregate MB/s: detects co-tenant bus contention
-  }
-
-  /** Random-access thread-scaling control: k threads each pointer-chase a
-    * PRIVATE 128MB single-cycle permutation (every load depends on the
-    * previous one — LLC/TLB/DRAM latency bound, the access pattern of
-    * shuffle hash-table probes, unlike the sequential-bandwidth probe
-    * above). Returns aggregate hops/s at k threads over k x the 1-thread
-    * rate: the fraction of k independent memory pipelines this VM actually
-    * delivers to latency-bound work — the hardware ceiling for the
-    * shuffle-heavy stages, which the register-only cpuThreadEff control
-    * (~1.0 at 8 threads) cannot see.
-    */
-  private def memRandomEff(threads: Int): Double = {
-    val n = 16 * 1024 * 1024 // 128MB of longs per thread, >> LLC
-    def cycle(): Array[Long] = {
-      val a = Array.tabulate(n)(_.toLong)
-      var seed = 0x243f6a8885a308d3L // fixed seed: deterministic artifact
-      var i = n - 1
-      while (i > 0) { // Sattolo shuffle: one n-cycle, so the chase visits all
-        seed = graft.functions.MinHashImpl.mix64(seed)
-        val j = java.lang.Math.floorMod(seed, i.toLong).toInt
-        val t = a(i); a(i) = a(j); a(j) = t
-        i -= 1
-      }
-      a
-    }
-    def rate(k: Int): Double = {
-      val arrays = Array.fill(k)(cycle())
-      val hops = 4 * 1024 * 1024
-      val sink = new java.util.concurrent.atomic.AtomicLong
-      val t0 = System.nanoTime()
-      val ts = arrays.map { a =>
-        val t = new Thread(() => {
-          var p = 0L
-          var i = 0
-          while (i < hops) { p = a(p.toInt); i += 1 }
-          sink.addAndGet(p)
-        })
-        t.start(); t
-      }
-      ts.foreach(_.join())
-      if (sink.get() == 42) println("")
-      k.toDouble * hops / ((System.nanoTime() - t0) / 1e9)
-    }
-    rate(1) // warm JIT
-    val r1 = rate(1)
-    rate(threads) / (threads * r1)
-  }
-
-  /** Pure-CPU thread-scaling control: k threads each run the SAME fixed
-    * mix64 chain over registers (zero memory traffic). Ideal hardware gives
-    * wall(k) == wall(1); wall(1)/wall(k) is the fraction of k independent
-    * cores this VM actually delivers — the ceiling no software can beat.
-    */
-  private def cpuThreadEff(threads: Int): Double = {
-    def burn(): Long = {
-      var h = 0x9e3779b97f4a7c15L
-      var i = 0
-      while (i < 150000000) { h = graft.functions.MinHashImpl.mix64(h); i += 1 }
-      h
-    }
-    def wall(k: Int): Double = {
-      val sink = new java.util.concurrent.atomic.AtomicLong
-      val t0 = System.nanoTime()
-      val ts = (0 until k).map { _ =>
-        val t = new Thread(() => { sink.addAndGet(burn()) })
-        t.start(); t
-      }
-      ts.foreach(_.join())
-      if (sink.get() == 42) println("")
-      (System.nanoTime() - t0) / 1e9
-    }
-    wall(1) // warm JIT
-    val w1 = wall(1)
-    w1 / wall(threads)
   }
 
   def main(args: Array[String]): Unit = {
@@ -333,30 +254,19 @@ object Bench {
     val scalingPairs = Seq(
       ("scaling", 1, 4), ("scaling_2_8", 2, 8), ("scaling_4_16", 4, 16), ("scaling_8_32", 8, 32))
 
-    // hardware controls: what this VM's cores/bus themselves deliver at the
-    // compared thread counts — the ceiling no job can exceed. mem bw is
-    // aggregate MB/s at k reader threads; cpu eff is wall(1)/wall(k) for a
-    // zero-memory register chain.
-    val bw = Seq(1, 2, 4, 8).map(k => k -> memBandwidthProbe(k))
-    val cpuEff4 = cpuThreadEff(4)
-    val cpuEff8 = cpuThreadEff(8)
-    val randEff4 = memRandomEff(4)
-    val randEff8 = memRandomEff(8)
-
     val qs = qTimes.toSeq.sortBy(_._1).map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{", ",", "}")
     val qe = qErrs.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":"${v.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", " ")}"""" }
       .mkString("{", ",", "}")
-    val bwJson = bw.map { case (k, v) => f""""$k":$v%.0f""" }.mkString("{", ",", "}")
     // dedup headline: the fastest QUALIFIED level (the configuration a real
     // deployment would run)
     val headCores = if (qualified.nonEmpty) qualified.minBy(wall) else levels.minBy(wall)
     val tHead = wall(headCores)
     val total = qTimes.values.sum + tHead
     // headline pair: 1 -> 4 cores, the largest N whose 4N thread count the
-    // VM's shared memory bus still feeds at near-ideal rate (see controls —
-    // at 8 threads the bus itself caps scaling well below 0.8, which the
-    // secondary scaling_2_8 object and its cpu/mem controls quantify)
+    // VM's shared memory bus still feeds at near-ideal rate (at 8 threads
+    // the bus itself caps scaling well below 0.8; the secondary scaling_2_8
+    // object records it)
     val blocks = (Seq(
       Some(f""""queries":$qs"""),
       if (qErrs.nonEmpty) Some(s""""query_errors":$qe""") else None,
@@ -365,10 +275,8 @@ object Bench {
       Some(s""""sf":"$sfDir""""),
       Some(f""""dedup":{"turns":$nTurns,"cores":$headCores,"wall_sec":$tHead%.2f,"turns_per_sec":${nTurns / tHead}%.1f}""")
     ) ++ scalingPairs.map { case (k, n, n4) => scalingBlock(k, n, n4) } ++ Seq(
-      Some(f""""controls":{"cpu_thread_eff_1_4":$cpuEff4%.3f,"cpu_thread_eff_1_8":$cpuEff8%.3f,""" +
-        f""""mem_random_eff_1_4":$randEff4%.3f,"mem_random_eff_1_8":$randEff8%.3f,""" +
-        f""""mem_bw_mbps_by_threads":$bwJson,""" +
-        f""""probe_gate":{"max_probe_mbps":$maxProbe%.0f,"qualified_runs":$nQualifiedRuns,"total_runs":${runs.size}}}"""),
+      Some(f""""controls":{"probe_gate":{"max_probe_mbps":$maxProbe%.0f,""" +
+        f""""qualified_runs":$nQualifiedRuns,"total_runs":${runs.size}}}"""),
       Some(qualified.map(c => f""""$c":${wall(c)}%.2f""").mkString(""""wall_sec_by_cores":{""", ",", "}")),
       if (unqualified.nonEmpty)
         Some(unqualified.toSeq.sorted.map(c => f""""$c":${wall(c)}%.2f""")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 import graft.pipeline.{Dedup, Eval}
 import graft.synth.Synth
@@ -17,7 +17,7 @@ import graft.synth.Synth
   *     [--synth-clusters N] [--cores N] [--threshold T] [--eval true]
   *     [--warehouse DIR]   checkpointed stages w/ resume (Checkpoint.scala)
   *     [--refine true]     per-block likelihood-cut refinement
-  *     [--profile true]    per-stage wall/cpu/gc
+  *     [--profile true]    per-stage (docs/sigs/candidates/pairs/clusters) wall/cpu/gc
   *     [--package F.zip]   zip the final clusters as result.json (S9)
   */
 object PipelineMain {
@@ -51,30 +51,16 @@ object PipelineMain {
     }
 
     val profile = opts.get("profile").contains("true")
-    // task-time accounting: wall vs summed task time exposes how much of the
-    // pipeline is actually parallel work vs driver planning/scheduling gaps
-    val taskNanos = new java.util.concurrent.atomic.AtomicLong
-    val gcNanos = new java.util.concurrent.atomic.AtomicLong
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong
-    val taskCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (te.taskMetrics != null) {
-          taskNanos.addAndGet(te.taskMetrics.executorRunTime * 1000000L)
-          gcNanos.addAndGet(te.taskMetrics.jvmGCTime * 1000000L)
-          cpuNanos.addAndGet(te.taskMetrics.executorCpuTime)
-          taskCount.incrementAndGet()
-        }
-      }
-    })
+    val metrics = TaskMetrics.attach(spark)
     def timed[A](name: String)(f: => A): A = {
       val s0 = System.nanoTime()
-      val (t0, c0, g0) = (taskNanos.get(), cpuNanos.get(), gcNanos.get())
+      val m0 = metrics.totals
       val r = f
-      if (profile)
+      if (profile) {
+        val d = metrics.totals - m0
         println(f"[stage] $name%-12s ${(System.nanoTime() - s0) / 1e9}%8.2f s wall  " +
-          f"${(taskNanos.get() - t0) / 1e9}%8.1f task-s  ${(cpuNanos.get() - c0) / 1e9}%8.1f cpu-s  " +
-          f"${(gcNanos.get() - g0) / 1e9}%6.1f gc-s")
+          f"${d.runS}%8.1f task-s  ${d.cpuS}%8.1f cpu-s  ${d.gcS}%6.1f gc-s")
+      }
       r
     }
 
@@ -88,19 +74,12 @@ object PipelineMain {
         }
         graft.pipeline.CheckpointedDedup.run(spark, transcripts, inputFp, opts("warehouse"), cfg)
       } else if (!profile) Dedup.run(spark, transcripts, cfg)
-      else {
-        val docs = Dedup.assemble(transcripts)
-        val shingled = Dedup.shingle(docs, cfg)
-        val sigs = Dedup.signatures(shingled, cfg).cache()
-        timed("signatures")(sigs.count())
-        val cands = Dedup.candidates(sigs, cfg).cache()
-        timed("candidates")(cands.count())
-        val pairs = Dedup.verify(cands, sigs, cfg).cache()
-        timed("verify")(pairs.count())
-        val clusters = timed("cc")(Dedup.cluster(spark, sigs, pairs).cache())
-        timed("cc_count")(clusters.count())
-        Dedup.Result(docs, sigs, pairs, clusters)
-      }
+      else
+        // cache and count each stage, so each stage's line holds its own work
+        Dedup.stages(spark, transcripts, cfg, new Dedup.StageBoundary {
+          def stage(name: String, config: String, upstream: Seq[String])(build: => DataFrame): DataFrame =
+            timed(name) { val df = build.cache(); df.count(); df }
+        })
     // optional likelihood-cut refinement of the CC clustering
     // (MT_Kruskal.R/likelihood.R parity path)
     val finalClusters =
@@ -136,12 +115,12 @@ object PipelineMain {
           s"${m.droppedPairs.value} cross-chunk pairs dropped (hub-chained)")
     }
 
-    val taskSec = taskNanos.get() / 1e9
+    val tm = metrics.totals
     println(
       f"""{"turns":$nTurns,"convs":$nConvs,"dup_pairs":$nDupPairs,"components":$nComponents,""" +
         f""""wall_sec":$wall%.2f,"turns_per_sec":${nTurns / wall}%.1f,""" +
-        f""""task_sec":$taskSec%.1f,"gc_sec":${gcNanos.get() / 1e9}%.1f,"cpu_sec":${cpuNanos.get() / 1e9}%.1f,""" +
-        f""""n_tasks":${taskCount.get()},"busy_frac":${taskSec / (wall * cores)}%.3f$evalJson}"""
+        f""""task_sec":${tm.runS}%.1f,"gc_sec":${tm.gcS}%.1f,"cpu_sec":${tm.cpuS}%.1f,""" +
+        f""""n_tasks":${tm.tasks},"busy_frac":${tm.runS / (wall * cores)}%.3f$evalJson}"""
     )
     spark.stop()
   }

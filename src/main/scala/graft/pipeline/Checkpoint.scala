@@ -6,7 +6,6 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Per-stage checkpointing with lineage + metrics manifests — the Spark
   * re-expression of the reference's Make checkpoint semantics
@@ -117,7 +116,8 @@ object TableIO {
 }
 
 /** Runs named stages with skip-if-complete semantics. */
-final class StageRunner(spark: SparkSession, warehouse: String, verbose: Boolean = true) {
+final class StageRunner(spark: SparkSession, warehouse: String, verbose: Boolean = true)
+    extends Dedup.StageBoundary {
   private val completed = scala.collection.mutable.Map[String, String]() // stage -> fingerprint
 
   /** Fingerprint of a stage = hash of its own config + upstream stage
@@ -134,6 +134,8 @@ final class StageRunner(spark: SparkSession, warehouse: String, verbose: Boolean
 
   /** Execute (or skip) a stage; returns the stage's DataFrame read from its
     * checkpoint table, so downstream plans never re-execute upstream lineage.
+    * The manifest's row count is a count of the written table, which reads
+    * no column data.
     */
   def stage(name: String, config: String, upstream: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
     val fp = fingerprintOf(config, upstream.map(fingerprint))
@@ -145,61 +147,10 @@ final class StageRunner(spark: SparkSession, warehouse: String, verbose: Boolean
         spark.read.parquet(dir)
       case _ =>
         val t0 = System.nanoTime()
-        // capture the write's own numOutputRows metric instead of re-reading
-        // the checkpoint just to count (at warehouse scale that second read
-        // doubles the stage's I/O). QueryExecutionListener events arrive
-        // async on the listener bus, hence the latch. The listener bus is
-        // SHARED across the session and delivery is async, so events from
-        // other actions (a prior stage's count(), a concurrent query) can
-        // arrive while this stage's write runs — accept only the event whose
-        // executed plan is a file-write command targeting THIS stage's
-        // directory. A missing/unmatched metric falls back to the old
-        // count-the-output read.
-        @volatile var written = -1L
-        val latch = new java.util.concurrent.CountDownLatch(1)
-        val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-          // fs-qualified target: path comparison must survive scheme/authority
-          // differences (file: vs none, trailing slash) between how the write
-          // command and this class spell the same directory
-          private val target = {
-            val p = new Path(dir)
-            TableIO.fsOf(p).makeQualified(p)
-          }
-          private def isOurWrite(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
-            qe.executedPlan match {
-              // match the write STRUCTURALLY on the command's own outputPath:
-              // a plan-STRING containment test silently never matches when
-              // spark.sql.maxToStringFields truncates the rendered plan,
-              // burning the full latch timeout + a re-count every stage
-              case exec: org.apache.spark.sql.execution.command.DataWritingCommandExec =>
-                exec.cmd match {
-                  case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
-                    TableIO.fsOf(c.outputPath).makeQualified(c.outputPath) == target
-                  case _ => false
-                }
-              // any other write plan shape (e.g. a future V2 path): keep the
-              // old substring heuristic as a fallback rather than never match
-              case p =>
-                p.getClass.getSimpleName.contains("Command") && p.toString.contains(dir)
-            }
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-            if (isOurWrite(qe)) {
-              qe.executedPlan.metrics.get("numOutputRows").foreach(m => written = m.value)
-              latch.countDown()
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
-            if (isOurWrite(qe)) latch.countDown()
-        }
-        spark.listenerManager.register(listener)
-        try {
-          build.write.mode("overwrite").parquet(dir)
-          latch.await(10, java.util.concurrent.TimeUnit.SECONDS)
-        } finally spark.listenerManager.unregister(listener)
+        build.write.mode("overwrite").parquet(dir)
         val wallMs = (System.nanoTime() - t0) / 1000000
         val out = spark.read.parquet(dir)
-        val rows = if (written >= 0) written else out.count()
+        val rows = out.count()
         val dirPath = new Path(dir)
         val files = TableIO.fsOf(dirPath)
           .listStatus(dirPath)
@@ -218,7 +169,7 @@ final class StageRunner(spark: SparkSession, warehouse: String, verbose: Boolean
 /** The dedup pipeline over checkpointed stages — every stage boundary is a
   * resumable table; a mid-pipeline kill resumes from the last complete stage
   * with byte-identical results (deterministic stages + content-addressed
-  * fingerprints).
+  * fingerprints). A skipped candidates stage leaves the skew counters at 0.
   */
 object CheckpointedDedup {
   def run(
@@ -229,26 +180,14 @@ object CheckpointedDedup {
       cfg: Dedup.Config = Dedup.Config(),
       verbose: Boolean = true
   ): Dedup.Result = {
-    val r = new StageRunner(spark, warehouse, verbose)
-    val cfgStr = cfg.toString
-    val docs = r.stage("docs", s"assemble|$cfgStr|$inputFingerprint")(Dedup.assemble(transcripts))
-    val sigs = r.stage("sigs", s"signatures|$cfgStr", Seq("docs"))(
-      Dedup.signatures(Dedup.shingle(docs, cfg), cfg)
-    )
-    val cands = r.stage("candidates", s"candidates|$cfgStr", Seq("sigs"))(
-      Dedup.candidates(sigs, cfg)
-    )
-    val pairs = r.stage("pairs", s"verify|$cfgStr", Seq("candidates", "sigs"))(
-      Dedup.verify(cands, sigs, cfg)
-    )
-    val clusters = r.stage("clusters", s"cluster|$cfgStr", Seq("pairs", "sigs"))(
-      Dedup.cluster(spark, sigs, pairs, ccCheckpointDir = Some(s"$warehouse/_cc_checkpoint"))
-    )
+    val ccDir = s"$warehouse/_cc_checkpoint"
+    val res = Dedup.stages(spark, transcripts, cfg, new StageRunner(spark, warehouse, verbose),
+      inputFingerprint, Some(ccDir))
     // the clusters stage is PERSISTED parquet at this point, so no live
     // lineage references the CC loop's reliable checkpoints — reclaim them
     // (they total one full edge-set copy per run and are never
     // reference-tracked by Spark's cleaner)
-    graft.plans.ConnectedComponents.cleanCheckpoints(spark, s"$warehouse/_cc_checkpoint")
-    Dedup.Result(docs, sigs, pairs, clusters)
+    graft.plans.ConnectedComponents.cleanCheckpoints(spark, ccDir)
+    res
   }
 }

@@ -67,9 +67,8 @@ object Dedup {
     * zero extra cost — so case/punctuation-variant near-dups cluster by
     * default (DedupPipelineSpec pins jaccard 1.0 for such variants). The
     * substring-anchor pass runs over the SAME normalized text (see
-    * functions/text.scala windowAnchors and substringCandidates: exact
-    * NORMALIZED-substring semantics — case/punctuation variants of a long
-    * block still collide).
+    * functions/text.scala windowAnchors: exact NORMALIZED-substring
+    * semantics — case/punctuation variants of a long block still collide).
     */
   def shingle(docs: DataFrame, cfg: Config): DataFrame =
     docs.select(
@@ -274,15 +273,6 @@ object Dedup {
   def simhashCandidates(sigs: DataFrame, cfg: Config, metrics: Option[SkewMetrics] = None): DataFrame =
     bucketPairs(simhashBuckets(sigs, cfg), cfg.bucketCap, simhashGate(cfg), metrics)
 
-  /** Exact-long-substring candidates via content-defined winnowing anchors
-    * (ContentAnchors; the distributed-suffix-array stand-in, SURVEY §7.5):
-    * two docs sharing any exact normalized substring of length
-    * >= window+stride-1 are guaranteed to collide on an anchor hash. Exact
-    * verification downstream keeps precision.
-    */
-  def substringCandidates(sigs: DataFrame, cfg: Config, metrics: Option[SkewMetrics] = None): DataFrame =
-    bucketPairs(anchorBuckets(sigs, cfg), cfg.bucketCap, metrics = metrics)
-
   /** ALL enabled candidate passes in ONE shuffle: the three bucket frames
     * (disjoint 64-bit key spaces) union before the single hash-partition +
     * sorted-group pair emission, so the full candidate generation costs one
@@ -363,19 +353,52 @@ object Dedup {
       skew: Map[String, SkewMetrics] = Map.empty // per-pass cap metrics
   )
 
+  /** One stage boundary, with `StageRunner.stage`'s shape: materializes (or
+    * leaves lazy) the stage `name`, whose fingerprint is `config` plus the
+    * fingerprints of its `upstream` stages, from `build`.
+    */
+  trait StageBoundary {
+    def stage(name: String, config: String, upstream: Seq[String])(build: => DataFrame): DataFrame
+  }
+
+  /** The dedup stage list, declared once: docs -> sigs -> candidates ->
+    * pairs -> clusters, each passed through `boundary`, which decides how
+    * the stage is materialized: `run` caches the reused ones, the
+    * checkpointed runner writes tables, `PipelineMain --profile` caches and
+    * times each stage. The candidates skew counters are final once the
+    * pairs stage has run.
+    * `inputFingerprint` feeds the docs stage's fingerprint; `ccCheckpointDir`
+    * goes to `cluster`.
+    */
+  def stages(
+      spark: SparkSession,
+      transcripts: DataFrame,
+      cfg: Config,
+      boundary: StageBoundary,
+      inputFingerprint: String = "",
+      ccCheckpointDir: Option[String] = None
+  ): Result = {
+    val c = cfg.toString
+    val skew = skewMetrics(spark, "candidates")
+    val docs = boundary.stage("docs", s"assemble|$c|$inputFingerprint", Nil)(assemble(transcripts))
+    val sigs = boundary.stage("sigs", s"signatures|$c", Seq("docs"))(signatures(shingle(docs, cfg), cfg))
+    val cands = boundary.stage("candidates", s"candidates|$c", Seq("sigs"))(candidates(sigs, cfg, Some(skew)))
+    val pairs = boundary.stage("pairs", s"verify|$c", Seq("candidates", "sigs"))(verify(cands, sigs, cfg))
+    val clusters = boundary.stage("clusters", s"cluster|$c", Seq("pairs", "sigs"))(
+      cluster(spark, sigs, pairs, ccCheckpointDir))
+    Result(docs, sigs, pairs, clusters, Map("candidates" -> skew))
+  }
+
   /** Full pipeline. Reused intermediates are cached (MEMORY_AND_DISK) — the
     * local analogue of the per-stage checkpoint tables the Checkpointed
     * runner writes at cluster scale; without it every downstream consumer
-    * re-executes the assemble/shingle/verify chain.
+    * re-executes the assemble/shingle/verify chain. `sigs` feeds candidates,
+    * verify and cluster; `pairs` feeds cluster and the caller's sink; docs,
+    * candidates and clusters have one consumer each and stay lazy.
     */
-  def run(spark: SparkSession, transcripts: DataFrame, cfg: Config = Config()): Result = {
-    val docs = assemble(transcripts) // single consumer (shingle) — not cached
-    val shingled = shingle(docs, cfg)
-    val sigs = signatures(shingled, cfg).cache() // reused by candidates + verify + cluster
-    val skew = Map("candidates" -> skewMetrics(spark, "candidates"))
-    val cands = candidates(sigs, cfg, skew.get("candidates"))
-    val pairs = verify(cands, sigs, cfg).cache() // consumed by cluster + caller's sink
-    val clusters = cluster(spark, sigs, pairs)
-    Result(docs, sigs, pairs, clusters, skew)
-  }
+  def run(spark: SparkSession, transcripts: DataFrame, cfg: Config = Config()): Result =
+    stages(spark, transcripts, cfg, new StageBoundary {
+      def stage(name: String, config: String, upstream: Seq[String])(build: => DataFrame): DataFrame =
+        if (name == "sigs" || name == "pairs") build.cache() else build
+    })
 }

@@ -68,8 +68,7 @@ class CheckpointSpec extends AnyFunSuite {
     assert(m.contains(".parquet"))
     val Some((fp, rows)) = TableIO.readManifest(wh, "clusters")
     assert(rows > 0 && fp.nonEmpty)
-    // the listener-captured write metric must equal the actual output count
-    // (no second read of the checkpoint just to count)
+    // the manifest's row count must equal the table actually written
     assert(rows == spark.read.parquet(s"$wh/clusters").count(),
       "manifest rows must match written rows")
   }
@@ -80,8 +79,8 @@ class CheckpointSpec extends AnyFunSuite {
     val wh = Files.createTempDirectory("graft-wh4").toString
     val noise = (1 to 500).toDF("x").cache()
     noise.count()
-    // hammer the listener bus with unrelated query completions while the
-    // stage writes: the runner must only trust the event from ITS OWN write
+    // run unrelated queries on the same session while the stage writes: the
+    // manifest must count only this stage's own table
     @volatile var stop = false
     val t = new Thread(() => while (!stop) { noise.agg(sum(col("x"))).collect(); Thread.sleep(1) })
     t.start()
@@ -91,7 +90,7 @@ class CheckpointSpec extends AnyFunSuite {
       assert(out.count() == 1234)
     } finally { stop = true; t.join() }
     val Some((_, rows)) = TableIO.readManifest(wh, "concurrent")
-    assert(rows == 1234, s"manifest rows $rows must be the stage's own write metric")
+    assert(rows == 1234, s"manifest rows $rows must be the stage's own row count")
   }
 
   test("zip packaging sink round-trips the result JSON (S9 parity)") {

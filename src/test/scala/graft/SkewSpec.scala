@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Dedup, Eval}
+import graft.pipeline.{CheckpointedDedup, Dedup, Eval}
 import graft.synth.Synth
 
 /** Skew handling under a tiny bucket cap: viral/boilerplate buckets larger
@@ -39,6 +39,21 @@ class SkewSpec extends AnyFunSuite {
     val recall = Eval.pairRecall(spark, clusters, oracle)
     info(f"recall under cap=8: $recall%.4f")
     assert(recall >= 0.99)
+
+    // the checkpointed path runs the same stage list: same cap counters, same
+    // clusters (its candidates stage is a written table, so the counters are
+    // final when run returns)
+    val wh = java.nio.file.Files.createTempDirectory("graft-skew-wh").toString
+    val ck = CheckpointedDedup.run(spark, transcripts, "skew", wh, cfg, verbose = false)
+    val ckCand = ck.skew("candidates")
+    assert(ckCand.oversizedBuckets.value > 0 && ckCand.droppedPairs.value > 0,
+      "the checkpointed path must report the cap's counters")
+    assert(ckCand.oversizedBuckets.value == cand.oversizedBuckets.value &&
+      ckCand.droppedPairs.value == cand.droppedPairs.value,
+      "checkpointed and cached runs must count the same capped buckets and dropped pairs")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels(ck.clusters) == labels(clusters), "checkpointed clusters must equal the cached run's")
   }
 
   test("embedding near-dup: one hot sign-LSH bucket stays bounded, recall preserved") {
