@@ -366,9 +366,8 @@ object Dedup {
     * the stage is materialized: `run` caches the reused ones, the
     * checkpointed runner writes tables, `PipelineMain --profile` caches and
     * times each stage. The candidates skew counters are final once the
-    * pairs stage has run.
-    * `inputFingerprint` feeds the docs stage's fingerprint; `ccCheckpointDir`
-    * goes to `cluster`.
+    * pairs stage has been computed. `inputFingerprint` feeds the docs
+    * stage's fingerprint; `ccCheckpointDir` goes to `cluster`.
     */
   def stages(
       spark: SparkSession,
