@@ -77,7 +77,8 @@ object PipelineMain {
       else
         // cache and count each stage, so each stage's line holds its own work
         Dedup.stages(spark, transcripts, cfg, new Dedup.StageBoundary {
-          def stage(name: String, config: String, upstream: Seq[String])(build: => DataFrame): DataFrame =
+          def stage(name: String, config: String, upstream: Seq[String],
+              counters: Seq[org.apache.spark.util.LongAccumulator])(build: => DataFrame): DataFrame =
             timed(name) { val df = build.cache(); df.count(); df }
         })
     // optional likelihood-cut refinement of the CC clustering

@@ -382,8 +382,10 @@ object Ann {
     * chunk with hub chaining — O(n*cap) pairs, never O(n^2), with
     * accumulator-logged drops), a packed 64-bit sign signature rides along as
     * the payload so an in-stream Hamming gate prunes far pairs before any
-    * vector is touched, and survivors pick their vectors back up by key for
-    * the exact cosine test. Output: (id1, id2, cos).
+    * vector is touched, and survivors pick their ids and vectors back up by
+    * `uid` for the exact cosine test. The `uid`s follow the `id` order
+    * (Dedup.withUid), so chunks and pair orientation are those of `id`.
+    * Output: (id1, id2, cos).
     */
   def nearDupPairs(
       corpus: DataFrame,
@@ -403,12 +405,13 @@ object Ann {
       gateBits,
       math.ceil(gateBits * f + 4 * math.sqrt(gateBits * f * (1 - f))).toInt
     )
-    val corpus0 = finiteVecs(corpus, "vec", dim)
+    // a null id can never be joined back to its pairs: drop it up front
+    val corpus0 = Dedup.withUid(finiteVecs(corpus, "vec", dim).where(col("id").isNotNull), col("id"))
     val bucketed = corpus0.select(
       explode(array((0 until nTables).map(t =>
         xxhash64(lit(t), signBucket(col("vec"), dim, nBits, seed + t * 1000003L))
       ): _*)).as("bucket"),
-      col("id"),
+      col("uid").as("id"),
       signBucket(col("vec"), dim, gateBits, MinHashImpl.mix64(seed) | 1L).as("payload")
     )
     val cand = Dedup.bucketPairs(
@@ -417,13 +420,13 @@ object Ann {
       (a, b) => java.lang.Long.bitCount(a ^ b) <= maxHam,
       metrics
     )
-    val v = corpus0.select(col("id"), col("vec"))
+    val v = corpus0.select(col("uid"), col("id"), col("vec"))
     cand
       .dropDuplicates("id1", "id2")
-      .join(v.select(col("id").as("id1"), col("vec").as("v1")), "id1")
-      .join(v.select(col("id").as("id2"), col("vec").as("v2")), "id2")
+      .join(v.toDF("id1", "k1", "v1"), "id1")
+      .join(v.toDF("id2", "k2", "v2"), "id2")
       .withColumn("cos", cosine(col("v1"), col("v2")))
       .where(col("cos") >= threshold)
-      .select(col("id1"), col("id2"), col("cos"))
+      .select(col("k1").as("id1"), col("k2").as("id2"), col("cos"))
   }
 }

@@ -47,12 +47,14 @@ object DocEmbed {
     // real scale — a 100x caller would funnel the whole corpus through one
     // task. Refuse loudly instead: past `maxSinglePartitionRows` the caller
     // must either opt into distributed SGD (numPartitions > 1) or raise the
-    // ceiling explicitly, acknowledging the serialization.
+    // ceiling explicitly, acknowledging the serialization. The probe reads at
+    // most one row past the ceiling, not the whole corpus.
     if (numPartitions <= 1) {
-      val n = input.count()
-      require(n <= maxSinglePartitionRows,
+      val probe = math.min(maxSinglePartitionRows, Int.MaxValue - 1L).toInt + 1
+      val overCeiling = input.limit(probe).count() > maxSinglePartitionRows
+      require(!overCeiling,
         s"DocEmbed.train with default numPartitions=1 sorts the corpus into ONE task " +
-          s"(reproducibility pin); input has $n rows > maxSinglePartitionRows=$maxSinglePartitionRows. " +
+          s"(reproducibility pin); input has more than maxSinglePartitionRows=$maxSinglePartitionRows rows. " +
           s"Pass numPartitions > 1 (distributed SGD; ANN-recall-gated in OpsSpec) or raise " +
           s"maxSinglePartitionRows to accept single-task training deliberately.")
     }

@@ -36,8 +36,9 @@ object DocNearDup {
     * banding recall at the default 32×4 over 128 perms is
     * 1-(1-j⁴)³² ≈ 0.9998 at j = 0.7 and →1 as j→1 (the planted-truth spec
     * holds the output EQUAL to the brute-force cross join on a planted
-    * corpus). `idCol` must be integral: pairs are emitted with id1 < id2
-    * numerically.
+    * corpus). `idCol` must be integral: its values are the pair emitter's
+    * `uid`s as they are (rows with a null id are dropped: they can match
+    * nothing), and pairs are emitted with id1 < id2 numerically.
     */
   def lshJaccardPairs(
       docs: DataFrame,
@@ -59,24 +60,24 @@ object DocNearDup {
     )
     val sigs = docs
       .select(
-        col(idCol).cast("string").as("conv_id"),
+        col(idCol).cast("long").as("uid"),
         array_sort(transform(T.wordGrams(col(textCol), 3), g => xxhash64(g))).as("shingles")
       )
       // a null text has no gram set: exclude it up front (it can match
       // nothing, and its null shingles would otherwise band into shared
       // garbage buckets via xxhash64's null-skipping seed hash)
-      .where($"shingles".isNotNull)
-      .select($"conv_id", $"shingles", MinHashSignature($"shingles", numPerms, seed).as("sig"))
-    val side = sigs.select($"conv_id", $"shingles")
+      .where($"uid".isNotNull && $"shingles".isNotNull)
+      .select($"uid", $"shingles", MinHashSignature($"shingles", numPerms, seed).as("sig"))
+    val side = sigs.select($"uid", $"shingles")
     val inter = SortedIntersectSize($"sh1", $"sh2")
     Dedup
       .lshCandidates(sigs, cfg)
       .distinct()
-      .join(side.select($"conv_id".as("id1"), $"shingles".as("sh1")), "id1")
-      .join(side.select($"conv_id".as("id2"), $"shingles".as("sh2")), "id2")
+      .join(side.toDF("id1", "sh1"), "id1")
+      .join(side.toDF("id2", "sh2"), "id2")
       .select(
-        least($"id1".cast("long"), $"id2".cast("long")).as("id1"),
-        greatest($"id1".cast("long"), $"id2".cast("long")).as("id2"),
+        least($"id1", $"id2").as("id1"),
+        greatest($"id1", $"id2").as("id2"),
         inter.as("inter"),
         (size($"sh1") + size($"sh2") - inter).as("uni")
       )
@@ -94,7 +95,7 @@ object DocNearDup {
     * Fingerprints are the d06 space — `SimHash64` over per-token hashes of
     * normalized text — so a pinned fingerprint table lets an independent
     * engine re-derive the ENTIRE ball join (`bit_count(xor(a, b)) <= d`).
-    * `idCol` must be integral: pairs are emitted with id1 < id2 numerically.
+    * `idCol` must be integral, as in [[lshJaccardPairs]].
     */
   def simhashHammingPairs(
       docs: DataFrame,
@@ -107,21 +108,22 @@ object DocNearDup {
     val cfg = Dedup.Config(simhashMaxHamming = maxHamming, bucketCap = bucketCap)
     val fp = docs
       .select(
-        col(idCol).cast("string").as("conv_id"),
+        col(idCol).cast("long").as("uid"),
         SimHash64(T.tokenHashes(T.tokens(col(textCol)))).as("simhash")
       )
-      // a null text has no fingerprint: exclude it up front — a null payload
-      // would violate the pair generator's typed (bucket, id, payload)
-      // encoder (NOT_NULL_ASSERT_VIOLATION), a task failure at corpus scale
-      .where($"simhash".isNotNull)
+      // a null id or text has no usable key or fingerprint: exclude it up
+      // front — a null id or payload would violate the pair generator's
+      // typed (bucket, id, payload) encoder (NOT_NULL_ASSERT_VIOLATION), a
+      // task failure at corpus scale
+      .where($"uid".isNotNull && $"simhash".isNotNull)
     Dedup
       .simhashCandidates(fp, cfg)
       .distinct()
-      .join(fp.select($"conv_id".as("id1"), $"simhash".as("s1")), "id1")
-      .join(fp.select($"conv_id".as("id2"), $"simhash".as("s2")), "id2")
+      .join(fp.toDF("id1", "s1"), "id1")
+      .join(fp.toDF("id2", "s2"), "id2")
       .select(
-        least($"id1".cast("long"), $"id2".cast("long")).as("id1"),
-        greatest($"id1".cast("long"), $"id2".cast("long")).as("id2"),
+        least($"id1", $"id2").as("id1"),
+        greatest($"id1", $"id2").as("id2"),
         bit_count($"s1".bitwiseXOR($"s2")).cast("int").as("hamming")
       )
       // the in-stream Hamming gate filters enumerated pairs, but a CAPPED

@@ -161,10 +161,12 @@ object PairClassifier {
     * No per-seed Spark jobs: 500 candidate splits cost zero extra actions.
     *
     * Deterministic: candidate k uses `new Random(seed0 + k)` over the
-    * block list sorted by key, so the winner is reproducible across runs
-    * and partitionings. Candidates that land all blocks on one side are
-    * skipped (gap undefined), mirroring the reference's implicit guarantee
-    * from its fixed 80/20 sizes.
+    * block list sorted by key (a null key first), so the winner is
+    * reproducible across runs and partitionings. Candidates that land all
+    * blocks on one side are skipped (gap undefined), mirroring the
+    * reference's implicit guarantee from its fixed 80/20 sizes. A null block
+    * key is one block like any other: the split is applied with a null-safe
+    * join, so its rows land on the side the search chose.
     */
   def blockSplitBalanced(
       labeled: DataFrame,
@@ -180,7 +182,7 @@ object PairClassifier {
       .agg(count(lit(1)).as("n"), sum(col("label").cast("long")).as("np"))
       .collect()
       .map(r => (r.get(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1.toString) // stable order -> deterministic shuffles below
+      .sortBy(t => Option(t._1).map(_.toString)) // stable order -> deterministic shuffles below
     require(stats.length >= 2, "blockSplitBalanced needs at least 2 blocks")
     val nTrain = math.max(1, math.min(stats.length - 1, math.round(trainFrac * stats.length).toInt))
     def gapOf(train: Array[(Any, Long, Long)], test: Array[(Any, Long, Long)]): Double = {
@@ -207,8 +209,9 @@ object PairClassifier {
     val trainBlocks = spark.createDataFrame(
       java.util.Arrays.asList(rows: _*),
       org.apache.spark.sql.types.StructType(Seq(blockField.copy(name = blockCol))))
-    val train = labeled.join(broadcast(trainBlocks), Seq(blockCol), "left_semi")
-    val test = labeled.join(broadcast(trainBlocks), Seq(blockCol), "left_anti")
+    val inTrain = labeled(blockCol) <=> trainBlocks(blockCol)
+    val train = labeled.join(broadcast(trainBlocks), inTrain, "left_semi")
+    val test = labeled.join(broadcast(trainBlocks), inTrain, "left_anti")
     BalancedSplit(train, test, bestSeed, bestGap)
   }
 }

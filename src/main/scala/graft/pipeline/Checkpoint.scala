@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.LongAccumulator
 
 /** Per-stage checkpointing with lineage + metrics manifests — the Spark
   * re-expression of the reference's Make checkpoint semantics
@@ -14,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   - each stage writes `warehouse/<stage>/` as Parquet plus a manifest
   *     `warehouse/_manifest/<stage>.json` recording the stage's input
-  *     fingerprint, row count, wall time, and per-partition-file lineage
-  *     (file, bytes) — the Iceberg-manifest-shaped metadata layer; the real
+  *     fingerprint, row count, wall time, the counters its build added to,
+  *     and per-partition-file lineage (file, bytes) — the
+  *     Iceberg-manifest-shaped metadata layer; the real
   *     Iceberg catalog binding drops into TableIO without touching callers;
   *   - the manifest is written only AFTER a successful Parquet commit, via
   *     atomic rename: a killed run leaves data without manifest, which is
@@ -31,12 +33,15 @@ object TableIO {
       fingerprint: String,
       rows: Long,
       wallMs: Long,
-      files: Seq[(String, Long)] // (file name, bytes) per partition file
+      files: Seq[(String, Long)], // (file name, bytes) per partition file
+      counters: Seq[(String, Long)] // (accumulator name, value added by the build)
   ) {
     def toJson: String = {
       def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val fs = files.map { case (f, b) => s"""{"file":${q(f)},"bytes":$b}""" }.mkString("[", ",", "]")
-      s"""{"stage":${q(stage)},"fingerprint":${q(fingerprint)},"rows":$rows,"wall_ms":$wallMs,"files":$fs}"""
+      val cs = counters.map { case (n, v) => s"${q(n)}:$v" }.mkString("{", ",", "}")
+      s"""{"stage":${q(stage)},"fingerprint":${q(fingerprint)},"rows":$rows,"wall_ms":$wallMs,""" +
+        s""""counters":$cs,"files":$fs}"""
     }
   }
 
@@ -55,18 +60,29 @@ object TableIO {
   private def manifestPath(warehouse: String, stage: String) =
     new Path(s"$warehouse/_manifest/$stage.json")
 
-  def readManifest(warehouse: String, stage: String): Option[(String, Long)] = {
+  private def manifestJson(warehouse: String, stage: String): Option[String] = {
     val p = manifestPath(warehouse, stage)
     val fs = fsOf(p)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val s = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+      Some(try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close())
+    }
+  }
+
+  /** (fingerprint, rows) of a stage's manifest, if it has one. */
+  def readManifest(warehouse: String, stage: String): Option[(String, Long)] =
+    manifestJson(warehouse, stage).flatMap { s =>
       val fp = """"fingerprint":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
       val rows = """"rows":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
       for (f <- fp; r <- rows) yield (f, r)
     }
-  }
+
+  /** The counters a stage's manifest records, by accumulator name. */
+  def readCounters(warehouse: String, stage: String): Map[String, Long] =
+    manifestJson(warehouse, stage).flatMap(""""counters":\{([^}]*)\}""".r.findFirstMatchIn(_)).toSeq
+      .flatMap(m => """"([^"]*)":(-?\d+)""".r.findAllMatchIn(m.group(1)).map(c => c.group(1) -> c.group(2).toLong))
+      .toMap
 
   def writeManifest(warehouse: String, m: Manifest): Unit = {
     val dir = new Path(s"$warehouse/_manifest")
@@ -135,14 +151,20 @@ final class StageRunner(spark: SparkSession, warehouse: String, verbose: Boolean
   /** Execute (or skip) a stage; returns the stage's DataFrame read from its
     * checkpoint table, so downstream plans never re-execute upstream lineage.
     * The manifest's row count is a count of the written table, which reads
-    * no column data.
+    * no column data. The manifest also keeps what the build added to each of
+    * `counters` (accumulators created for this run, so at zero before it),
+    * and a skipped stage adds those values back.
     */
-  def stage(name: String, config: String, upstream: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
+  def stage(name: String, config: String, upstream: Seq[String] = Nil,
+      counters: Seq[LongAccumulator] = Nil)(build: => DataFrame): DataFrame = {
     val fp = fingerprintOf(config, upstream.map(fingerprint))
     val dir = s"$warehouse/$name"
+    val keyed = counters.zipWithIndex.map { case (a, i) => (a.name.getOrElse(s"counter$i"), a) }
     TableIO.readManifest(warehouse, name) match {
       case Some((oldFp, rows)) if oldFp == fp =>
         if (verbose) println(s"[checkpoint] skip $name (fingerprint $fp, $rows rows)")
+        val stored = TableIO.readCounters(warehouse, name)
+        keyed.foreach { case (k, a) => a.add(stored.getOrElse(k, 0L)) }
         completed(name) = fp
         spark.read.parquet(dir)
       case _ =>
@@ -158,7 +180,8 @@ final class StageRunner(spark: SparkSession, warehouse: String, verbose: Boolean
           .map(f => (f.getPath.getName, f.getLen))
           .toSeq
           .sortBy(_._1)
-        TableIO.writeManifest(warehouse, TableIO.Manifest(name, fp, rows, wallMs, files))
+        TableIO.writeManifest(warehouse,
+          TableIO.Manifest(name, fp, rows, wallMs, files, keyed.map { case (k, a) => k -> a.sum }))
         if (verbose) println(s"[checkpoint] built $name (fingerprint $fp, $rows rows, ${wallMs}ms, ${files.size} files)")
         completed(name) = fp
         out
@@ -169,7 +192,8 @@ final class StageRunner(spark: SparkSession, warehouse: String, verbose: Boolean
 /** The dedup pipeline over checkpointed stages — every stage boundary is a
   * resumable table; a mid-pipeline kill resumes from the last complete stage
   * with byte-identical results (deterministic stages + content-addressed
-  * fingerprints). A skipped candidates stage leaves the skew counters at 0.
+  * fingerprints). A skipped candidates stage restores its skew counters from
+  * its manifest.
   */
 object CheckpointedDedup {
   def run(

@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.Cols._
 import graft.functions.{text => T, MinHashSignature, SimHash64, SortedIntersectSize}
@@ -18,6 +18,12 @@ import graft.plans.ConnectedComponents
   * any prefix):
   *   assemble -> shingle -> signatures -> candidates (LSH ∪ SimHash ∪
   *   substring-anchor) -> verify (exact Jaccard) -> cluster (CC) -> clusters
+  *
+  * `assemble` gives every conversation a `uid: Long` whose order is the
+  * `conv_id` string order. The bucket rows, the pair emitter and the
+  * candidate pairs carry only `uid`s; `verify` maps them back to `conv_id`
+  * from the signature rows it joins, so pairs and clusters are keyed by
+  * `conv_id`.
   */
 object Dedup {
 
@@ -42,25 +48,54 @@ object Dedup {
   /** Per-conversation document assembly under stable turn ordering.
     * `array_sort` over struct(turn_idx, ...) makes the reference's implicit
     * positional ordering (SURVEY §1.3) explicit — collect_list order is
-    * nondeterministic, the sort key is not.
-    * Output: (conv_id, doc, n_turns)
+    * nondeterministic, the sort key is not. The assembly shuffle is a range
+    * partitioning on `conv_id`, which also numbers the conversations (see
+    * [[numberRanged]]: materialize the result before two consumers join on
+    * `uid`). Output: (conv_id, doc, n_turns, uid)
     */
   def assemble(transcripts: DataFrame): DataFrame =
-    transcripts
-      .where($"conv_id".isNotNull) // a rowless key cannot cluster; drop, don't NPE
-      .groupBy($"conv_id")
-      .agg(
-        concat_ws(
-          "\n",
-          transform(
-            array_sort(collect_list(struct($"turn_idx", $"text"))),
-            s => s.getField("text")
-          )
-        ).as("doc"),
-        count(lit(1)).as("n_turns")
-      )
+    numberRanged(
+      transcripts
+        .where($"conv_id".isNotNull) // a rowless key cannot cluster; drop, don't NPE
+        .repartitionByRange($"conv_id")
+        .groupBy($"conv_id")
+        .agg(
+          concat_ws(
+            "\n",
+            transform(
+              array_sort(collect_list(struct($"turn_idx", $"text"))),
+              s => s.getField("text")
+            )
+          ).as("doc"),
+          count(lit(1)).as("n_turns")
+        ),
+      $"conv_id")
 
-  /** (conv_id, doc, n_turns, shingles array<int> sorted distinct).
+  /** Adds `uid: Long`, unique per row and ordered as `id` is, to a frame
+    * already range-partitioned by `id`: partition i holds only ids below
+    * those of partition i+1 (AQE coalescing merges adjacent partitions
+    * only), and `monotonically_increasing_id` numbers each partition's rows
+    * in its sort order. The pair emitter chunks oversized buckets in id
+    * order, so numbering in the id's own Spark order keeps the same chunks,
+    * dropped pairs and `id1 < id2` orientation as emitting on `id` itself.
+    * Costs the range partitioner's sampling job, not a count.
+    *
+    * The numbering is fixed per evaluation, not per input: the range
+    * partitioner samples with a per-run seed. So the emitter's pairs and the
+    * rows that map them back must come from one materialized copy (a cached
+    * or written `sigs`, as every stage boundary of [[stages]] provides).
+    */
+  private def numberRanged(ranged: DataFrame, id: Column): DataFrame =
+    ranged.sortWithinPartitions(id).withColumn("uid", monotonically_increasing_id())
+
+  /** [[numberRanged]] for a frame with any layout: one range shuffle. The
+    * result is a lazy local checkpoint, so every branch of a query that
+    * reads it sees the same numbering.
+    */
+  private[graft] def withUid(df: DataFrame, id: Column): DataFrame =
+    numberRanged(df.repartitionByRange(id), id).localCheckpoint(eager = false)
+
+  /** (conv_id, uid, doc, n_turns, shingles array<int> sorted distinct).
     * The reference's pre-tokenization normalization (P6,
     * venue_author_preprocess.R:18-39: lowercase, punctuation -> delimiter)
     * is FUSED inside ShingleHashes' single char pass — always on, map-side,
@@ -73,6 +108,7 @@ object Dedup {
   def shingle(docs: DataFrame, cfg: Config): DataFrame =
     docs.select(
       $"conv_id",
+      $"uid",
       $"doc",
       $"n_turns",
       graft.functions.ShingleHashes($"doc", cfg.shingleK).as("shingles")
@@ -86,6 +122,7 @@ object Dedup {
   def signatures(shingled: DataFrame, cfg: Config): DataFrame =
     shingled.select(
       $"conv_id",
+      $"uid",
       $"shingles",
       MinHashSignature($"shingles", cfg.numPerms, cfg.seed).as("sig"),
       SimHash64($"shingles").as("simhash"),
@@ -99,10 +136,7 @@ object Dedup {
     * hub chain that preserves connectivity) are counted via accumulators and
     * must be logged by the caller.
     */
-  final case class SkewMetrics(
-      oversizedBuckets: org.apache.spark.util.LongAccumulator,
-      droppedPairs: org.apache.spark.util.LongAccumulator
-  )
+  final case class SkewMetrics(oversizedBuckets: LongAccumulator, droppedPairs: LongAccumulator)
 
   def skewMetrics(spark: SparkSession, pass: String): SkewMetrics = SkewMetrics(
     spark.sparkContext.longAccumulator(s"graft.$pass.oversized_buckets"),
@@ -129,7 +163,7 @@ object Dedup {
     * package-private visibility.
     */
   private[graft] def bucketPairs(
-      bucketed: DataFrame, // (bucket long, id string, payload long)
+      bucketed: DataFrame, // (bucket long, id long, payload long)
       cap: Int,
       pairFilter: (Long, Long) => Boolean = (_, _) => true,
       metrics: Option[SkewMetrics] = None
@@ -137,7 +171,7 @@ object Dedup {
     val spark = bucketed.sparkSession
     import spark.implicits._
     bucketed
-      .as[(Long, String, Long)]
+      .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .flatMapSortedGroups(col("id")) { (_, it) =>
         // almost all buckets are singletons (unique anchors/bands): bail out
@@ -155,24 +189,27 @@ object Dedup {
     * allocating per group.
     */
   private final class ChunkPairIterator(
-      first: (Long, String, Long),
-      it: Iterator[(Long, String, Long)],
+      first: (Long, Long, Long),
+      it: Iterator[(Long, Long, Long)],
       cap: Int,
       pairFilter: (Long, Long) => Boolean,
       metrics: Option[SkewMetrics]
-  ) extends Iterator[(String, String)] {
+  ) extends Iterator[(Long, Long)] {
     private val (ids, pls) = Dedup.buffers(cap)
     private var n = 0
     private var i = 0 // pair cursor within chunk
     private var j = 1
     private var pendingFirst = true
-    private var prevHub: String = null
-    private var hubEdge: (String, String) = null
+    private var prevHub = 0L
+    private var hubPending = false // (prevHub, ids(0)) not yet emitted
     private var seen = 0L // total ids consumed (for dropped-pair accounting)
+    private var more = false // (na, nb) holds the next pair
+    private var na = 0L
+    private var nb = 0L
 
     private def refill(): Unit = {
       val prevSeen = seen
-      if (n > 0) prevHub = ids(0)
+      val hub = ids(0) // the previous chunk's first id, if prevSeen > 0
       n = 0; i = 0; j = 1
       if (pendingFirst) { ids(0) = first._2; pls(0) = first._3; n = 1; pendingFirst = false }
       while (n < cap && it.hasNext) {
@@ -184,45 +221,46 @@ object Dedup {
         // cross-chunk pairs the cap dropped (minus the 1 hub edge kept)
         if (prevSeen == cap.toLong) metrics.foreach(_.oversizedBuckets.add(1))
         metrics.foreach(_.droppedPairs.add(prevSeen * n - 1))
+        prevHub = hub; hubPending = true
       }
-      if (n > 0 && prevHub != null) hubEdge = (prevHub, ids(0))
     }
 
-    private def advance(): (String, String) = {
+    private def advance(): Boolean = {
       while (true) {
-        if (hubEdge != null) { val e = hubEdge; hubEdge = null; return e }
+        if (hubPending) { hubPending = false; na = prevHub; nb = ids(0); return true }
         while (j < n) {
           val (a, b) = (i, j)
           j += 1
           if (j == n) { i += 1; j = i + 1 }
-          if (pairFilter(pls(a), pls(b))) return (ids(a), ids(b))
+          if (pairFilter(pls(a), pls(b))) { na = ids(a); nb = ids(b); return true }
         }
-        if (!it.hasNext) return null
+        if (!it.hasNext) return false
         refill()
       }
-      null
+      false
     }
 
     refill()
-    private var nxt = advance()
-    override def hasNext: Boolean = nxt != null
-    override def next(): (String, String) = { val r = nxt; nxt = advance(); r }
+    more = advance()
+    override def hasNext: Boolean = more
+    override def next(): (Long, Long) = { val r = (na, nb); more = advance(); r }
   }
 
-  private val tlBuffers = new ThreadLocal[(Array[String], Array[Long])]
-  private def buffers(cap: Int): (Array[String], Array[Long]) = {
+  private val tlBuffers = new ThreadLocal[(Array[Long], Array[Long])]
+  private def buffers(cap: Int): (Array[Long], Array[Long]) = {
     var b = tlBuffers.get()
     if (b == null || b._1.length < cap) {
-      b = (new Array[String](cap), new Array[Long](cap))
+      b = (new Array[Long](cap), new Array[Long](cap))
       tlBuffers.set(b)
     }
     b
   }
 
   /** (bucket, id, payload) rows of the MinHash LSH banding pass — shared by
-    * the batch candidate generator and the incremental bucket store.
+    * the batch candidate generator (`id` = `uid`) and the incremental bucket
+    * store (`id` = `conv_id`, stable across batches).
     */
-  private[graft] def lshBuckets(sigs: DataFrame, cfg: Config): DataFrame = {
+  private[graft] def lshBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame = {
     val r = cfg.rows
     sigs.select(
       explode(
@@ -231,28 +269,28 @@ object Dedup {
           b => xxhash64(slice($"sig", b * r + 1, lit(r)), b)
         )
       ).as("bucket"),
-      $"conv_id".as("id"),
+      id.as("id"),
       lit(0L).as("payload")
     )
   }
 
   /** (bucket, id, payload=simhash) rows of the SimHash chunk pass. */
-  private[graft] def simhashBuckets(sigs: DataFrame, cfg: Config): DataFrame =
+  private[graft] def simhashBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame =
     sigs.select(
       explode(
         array((0 until 4).map(i =>
           xxhash64(shiftrightunsigned($"simhash", i * 16).bitwiseAND(lit(0xffffL)), lit(i))
         ): _*)
       ).as("bucket"),
-      $"conv_id".as("id"),
+      id.as("id"),
       $"simhash".as("payload")
     )
 
   /** (bucket, id, payload) rows of the winnowing-anchor substring pass. */
-  private[graft] def anchorBuckets(sigs: DataFrame, cfg: Config): DataFrame =
+  private[graft] def anchorBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame =
     sigs.select(
       explode($"anchors").as("bucket"),
-      $"conv_id".as("id"),
+      id.as("id"),
       lit(0L).as("payload")
     )
 
@@ -262,7 +300,10 @@ object Dedup {
     (a, b) => java.lang.Long.bitCount(a ^ b) <= maxD
   }
 
-  /** MinHash LSH banding: band hash -> bucket, then streamed pair emission. */
+  /** MinHash LSH banding: band hash -> bucket, then streamed pair emission.
+    * Emits (id1, id2) `uid` pairs, a pair once per bucket the two share;
+    * [[convIdPairs]] maps them to `conv_id`s.
+    */
   def lshCandidates(sigs: DataFrame, cfg: Config, metrics: Option[SkewMetrics] = None): DataFrame =
     bucketPairs(lshBuckets(sigs, cfg), cfg.bucketCap, metrics = metrics)
 
@@ -285,6 +326,10 @@ object Dedup {
     * non-zero (LSH/anchor rows carry payload 0; a genuine simhash of 0 — an
     * empty doc — passes the gate and is caught by exact verification like
     * any other candidate).
+    *
+    * A pair shares a bucket in many bands and passes, so the emitter repeats
+    * it dozens of times; the pairs are de-duplicated here, map-side first,
+    * on the two `uid`s. Output: distinct (id1, id2) `uid` pairs, id1 < id2.
     */
   def candidates(sigs: DataFrame, cfg: Config, metrics: Option[SkewMetrics] = None): DataFrame = {
     var entries = lshBuckets(sigs, cfg)
@@ -293,19 +338,39 @@ object Dedup {
     val maxD = cfg.simhashMaxHamming
     val gate: (Long, Long) => Boolean =
       (a, b) => (a == 0L && b == 0L) || java.lang.Long.bitCount(a ^ b) <= maxD
-    bucketPairs(entries, cfg.bucketCap, gate, metrics)
+    bucketPairs(entries, cfg.bucketCap, gate, metrics).distinct()
+  }
+
+  /** (id1, id2) `uid` pairs mapped to (id1, id2) `conv_id` pairs through the
+    * (uid, conv_id) columns of `sigs`.
+    */
+  def convIdPairs(pairs: DataFrame, sigs: DataFrame): DataFrame = {
+    val ids = sigs.select($"uid", $"conv_id")
+    pairs
+      .join(ids.toDF("id1", "c1"), "id1")
+      .join(ids.toDF("id2", "c2"), "id2")
+      .select($"c1".as("id1"), $"c2".as("id2"))
   }
 
   /** Verification of distinct candidate pairs against exact shingle-set
     * Jaccard (c_org.py:18-28 analogue, keyed joins instead of positional
-    * alignment). One fused join pass: pairs pick up (sig, shingles) for each
-    * side in two shuffles total; the cheap 128-int signature estimate gates
-    * the merge-intersection of the full shingle arrays row-locally.
-    * ShingleHashes emits sorted arrays, so exact |∩| is a linear merge
-    * (SortedIntersectSize), not a hash build. Output: (id1, id2, jaccard).
+    * alignment). One fused join pass: pairs pick up (conv_id, sig, shingles)
+    * for each side in two shuffles total; the cheap 128-int signature
+    * estimate gates the merge-intersection of the full shingle arrays
+    * row-locally. ShingleHashes emits sorted arrays, so exact |∩| is a linear
+    * merge (SortedIntersectSize), not a hash build. `cands` are the distinct
+    * `uid` pairs of [[candidates]]. Output: (id1, id2, jaccard) with
+    * `conv_id`s.
     */
-  def verify(cands: DataFrame, sigs: DataFrame, cfg: Config): DataFrame = {
-    val side = sigs.select($"conv_id", $"sig", $"shingles")
+  def verify(cands: DataFrame, sigs: DataFrame, cfg: Config): DataFrame = verifyOn("uid", cands, sigs, cfg)
+
+  /** [[verify]] over distinct candidate pairs of the `sigs` column `key`:
+    * `uid` for the batch pipeline, `conv_id` for the incremental one, whose
+    * stores know no `uid`.
+    */
+  private[graft] def verifyOn(key: String, cands: DataFrame, sigs: DataFrame, cfg: Config): DataFrame = {
+    def side(i: Int) =
+      sigs.select(col(key).as(s"id$i"), $"conv_id".as(s"c$i"), $"sig".as(s"sig$i"), $"shingles".as(s"sh$i"))
     val est = aggregate(
       zip_with($"sig1", $"sig2", (x, y) => (x === y).cast("int")),
       lit(0),
@@ -314,13 +379,12 @@ object Dedup {
     val inter = SortedIntersectSize($"sh1", $"sh2").cast("double")
     val uni = (size($"sh1") + size($"sh2")).cast("double") - inter
     cands
-      .distinct()
-      .join(side.select($"conv_id".as("id1"), $"sig".as("sig1"), $"shingles".as("sh1")), "id1")
-      .join(side.select($"conv_id".as("id2"), $"sig".as("sig2"), $"shingles".as("sh2")), "id2")
+      .join(side(1), "id1")
+      .join(side(2), "id2")
       .where(est >= cfg.threshold - cfg.estMargin)
       .withColumn("jaccard", when(uni === 0d, lit(1.0)).otherwise(inter / uni))
       .where($"jaccard" >= cfg.threshold)
-      .select($"id1", $"id2", $"jaccard")
+      .select($"c1".as("id1"), $"c2".as("id2"), $"jaccard")
   }
 
   /** Cluster verified pairs; every conversation gets a row (singletons map to
@@ -346,8 +410,8 @@ object Dedup {
   }
 
   final case class Result(
-      docs: DataFrame, // (conv_id, doc, n_turns)
-      sigs: DataFrame, // (conv_id, shingles, sig, simhash)
+      docs: DataFrame, // (conv_id, doc, n_turns, uid)
+      sigs: DataFrame, // (conv_id, uid, shingles, sig, simhash, anchors)
       pairs: DataFrame, // (id1, id2, jaccard) verified
       clusters: DataFrame, // (conv_id, component)
       skew: Map[String, SkewMetrics] = Map.empty // per-pass cap metrics
@@ -355,19 +419,31 @@ object Dedup {
 
   /** One stage boundary, with `StageRunner.stage`'s shape: materializes (or
     * leaves lazy) the stage `name`, whose fingerprint is `config` plus the
-    * fingerprints of its `upstream` stages, from `build`.
+    * fingerprints of its `upstream` stages, from `build`. `counters` are the
+    * accumulators `build` adds to; a boundary that skips `build` must
+    * restore their values.
     */
   trait StageBoundary {
-    def stage(name: String, config: String, upstream: Seq[String])(build: => DataFrame): DataFrame
+    def stage(name: String, config: String, upstream: Seq[String], counters: Seq[LongAccumulator] = Nil)(
+        build: => DataFrame): DataFrame
   }
+
+  /** Layout of the stage tables, part of the docs stage's fingerprint (and so,
+    * chained, of every stage's): a checkpoint written in another layout is
+    * rebuilt, never read. `uid1`: docs, sigs and candidates carry `uid`.
+    */
+  private val StageFormat = "uid1"
 
   /** The dedup stage list, declared once: docs -> sigs -> candidates ->
     * pairs -> clusters, each passed through `boundary`, which decides how
     * the stage is materialized: `run` caches the reused ones, the
     * checkpointed runner writes tables, `PipelineMain --profile` caches and
-    * times each stage. The candidates skew counters are final once the
-    * pairs stage has been computed. `inputFingerprint` feeds the docs
-    * stage's fingerprint; `ccCheckpointDir` goes to `cluster`.
+    * times each stage. Tables: docs (conv_id, doc, n_turns, uid), sigs (see
+    * [[Result]]), candidates (distinct (id1, id2) `uid` pairs), pairs
+    * (id1, id2, jaccard) and clusters (conv_id, component), keyed by
+    * `conv_id`. The candidates skew counters are final once the pairs stage
+    * has been computed. `inputFingerprint` feeds the docs stage's
+    * fingerprint; `ccCheckpointDir` goes to `cluster`.
     */
   def stages(
       spark: SparkSession,
@@ -379,9 +455,10 @@ object Dedup {
   ): Result = {
     val c = cfg.toString
     val skew = skewMetrics(spark, "candidates")
-    val docs = boundary.stage("docs", s"assemble|$c|$inputFingerprint", Nil)(assemble(transcripts))
+    val docs = boundary.stage("docs", s"assemble|$StageFormat|$c|$inputFingerprint", Nil)(assemble(transcripts))
     val sigs = boundary.stage("sigs", s"signatures|$c", Seq("docs"))(signatures(shingle(docs, cfg), cfg))
-    val cands = boundary.stage("candidates", s"candidates|$c", Seq("sigs"))(candidates(sigs, cfg, Some(skew)))
+    val cands = boundary.stage("candidates", s"candidates|$c", Seq("sigs"),
+      Seq(skew.oversizedBuckets, skew.droppedPairs))(candidates(sigs, cfg, Some(skew)))
     val pairs = boundary.stage("pairs", s"verify|$c", Seq("candidates", "sigs"))(verify(cands, sigs, cfg))
     val clusters = boundary.stage("clusters", s"cluster|$c", Seq("pairs", "sigs"))(
       cluster(spark, sigs, pairs, ccCheckpointDir))
@@ -397,7 +474,8 @@ object Dedup {
     */
   def run(spark: SparkSession, transcripts: DataFrame, cfg: Config = Config()): Result =
     stages(spark, transcripts, cfg, new StageBoundary {
-      def stage(name: String, config: String, upstream: Seq[String])(build: => DataFrame): DataFrame =
+      def stage(name: String, config: String, upstream: Seq[String], counters: Seq[LongAccumulator])(
+          build: => DataFrame): DataFrame =
         if (name == "sigs" || name == "pairs") build.cache() else build
     })
 }

@@ -314,16 +314,19 @@ object IncrementalDedup {
     if (fs.exists(d)) fs.listStatus(d).foreach(st => fs.delete(st.getPath, false))
   }
 
-  /** All bucket entries of a signature frame, tagged by pass. */
+  /** All bucket entries of a signature frame, tagged by pass. The store is
+    * keyed by `conv_id`: a batch's `uid`s mean nothing to the next batch.
+    */
   private def bucketEntries(sigs: DataFrame, cfg: Dedup.Config): DataFrame = {
-    val l = Dedup.lshBuckets(sigs, cfg).select(lit("lsh").as("pass"), $"bucket", $"id", $"payload")
+    val id = $"conv_id"
+    val l = Dedup.lshBuckets(sigs, cfg, id).select(lit("lsh").as("pass"), $"bucket", $"id", $"payload")
     val s =
       if (cfg.simhashEnabled)
-        Dedup.simhashBuckets(sigs, cfg).select(lit("sim").as("pass"), $"bucket", $"id", $"payload")
+        Dedup.simhashBuckets(sigs, cfg, id).select(lit("sim").as("pass"), $"bucket", $"id", $"payload")
       else l.limit(0)
     val a =
       if (cfg.substringEnabled)
-        Dedup.anchorBuckets(sigs, cfg).select(lit("sub").as("pass"), $"bucket", $"id", $"payload")
+        Dedup.anchorBuckets(sigs, cfg, id).select(lit("sub").as("pass"), $"bucket", $"id", $"payload")
       else l.limit(0)
     l.unionByName(s).unionByName(a)
   }
@@ -390,8 +393,9 @@ object IncrementalDedup {
 
     // (a) new x new — the batch generator over just this batch's signatures
     // (identical chunk-cap semantics to the batch pipeline, one shuffle);
-    // the chunk-cap accumulators ride the same tasks when metrics are on
-    var cands = Dedup.candidates(newSigs, cfg, skew.map(_.newNew))
+    // the chunk-cap accumulators ride the same tasks when metrics are on.
+    // Its pairs are of the batch's uids: map them to conv_ids
+    var cands = Dedup.convIdPairs(Dedup.candidates(newSigs, cfg, skew.map(_.newNew)), newSigs)
 
     // (b) new x old — join new bucket entries against the persisted store;
     // old side of oversized buckets hash-thinned to bucketCap
@@ -460,8 +464,9 @@ object IncrementalDedup {
     // O(candidates), not O(accumulated corpus); in the trickle regime the
     // semi join broadcasts the candidate ids, so the growing store is
     // scanned but never re-shuffled (cands is cached: it feeds both the id
-    // set and the verify join)
-    val candKeys = cands.select($"id1", $"id2").cache()
+    // set and the verify join). The new x old join repeats a pair once per
+    // bucket the two share, so de-duplicate before verifying
+    val candKeys = cands.select($"id1", $"id2").distinct().cache()
     val nCandKeys = candKeys.count() // materializes the cache; bounds the id-set size
     val candIds = candKeys.select($"id1".as("conv_id")).union(candKeys.select($"id2".as("conv_id")))
       .distinct()
@@ -480,7 +485,7 @@ object IncrementalDedup {
           .join(idKeys, Seq("conv_id"), "left_semi")
       } else newSigs.select(sigCols: _*).limit(0)
     val all = oldSigs.select(sigCols: _*).union(newSigs.select(sigCols: _*))
-    val pairs = Dedup.verify(candKeys, all, cfg).cache()
+    val pairs = Dedup.verifyOn("conv_id", candKeys, all, cfg).cache()
     val nPairs = pairs.count()
 
     // skip the write when the batch found no pairs: an all-empty-partition

@@ -564,6 +564,15 @@ class OpsSpec extends AnyFunSuite {
     DocEmbed.train(docs, dim = 4, iters = 1, numPartitions = 2, maxSinglePartitionRows = 10L)
     // explicit ceiling raise accepts single-task training deliberately
     DocEmbed.train(docs, dim = 4, iters = 1, maxSinglePartitionRows = 100L)
+    // the ceiling is inclusive: 20 rows pass at 20 and trip at 19
+    DocEmbed.train(docs, dim = 4, iters = 1, maxSinglePartitionRows = 20L)
+    intercept[IllegalArgumentException](DocEmbed.train(docs, dim = 4, iters = 1, maxSinglePartitionRows = 19L))
+    // the guard probes one row past the ceiling instead of counting the corpus
+    val read = spark.sparkContext.longAccumulator("docembed.rows_read")
+    val seen = udf { (id: String) => read.add(1); true }.asNondeterministic()
+    val big = (0 until 5000).map(i => (s"d$i", Seq("a"))).toDF("id", "tokens").coalesce(1).where(seen($"id"))
+    intercept[IllegalArgumentException](DocEmbed.train(big, dim = 4, iters = 1, maxSinglePartitionRows = 10L))
+    assert(read.value < 100, s"the scale guard read ${read.value} rows to check a ceiling of 10")
   }
 
   test("text -> Word2Vec -> IVF end-to-end recall vs brute force") {

@@ -26,7 +26,7 @@ class PairClassifierSpec extends AnyFunSuite {
     // candidates WITHOUT the exact-verify gate: classifier replaces the gate.
     // Use a loosened config so both positives and negatives flow through.
     val loose = cfg.copy(simhashEnabled = false, substringEnabled = false)
-    val lsh = Dedup.lshCandidates(sigs, loose).distinct()
+    val lsh = Dedup.convIdPairs(Dedup.lshCandidates(sigs, loose), sigs).distinct()
     // LSH candidates are nearly all true dups; add hash-shuffled adjacent
     // pairs as background negatives (classifier.py trains on all block pairs,
     // which are overwhelmingly negative)
@@ -132,6 +132,24 @@ class PairClassifierSpec extends AnyFunSuite {
     assert(res.train.count() + res.test.count() == rows.size)
     // determinism: same inputs -> same winner
     val res2 = PairClassifier.blockSplitBalanced(labeled, "block", trainFrac = 0.5, nSeeds = 500)
+    assert(res2.seed == res.seed && res2.gap == res.gap)
+  }
+
+  test("balanced block split treats a null block key as one block") {
+    val rows = (0 until 12).flatMap { b =>
+      val block = if (b == 0) null else s"b$b"
+      (0 until 3 + b).map(i => (block, s"p${b}_$i", (b + i) % 2))
+    }
+    val labeled = rows.toDF("block", "pair_id", "label")
+    val res = PairClassifier.blockSplitBalanced(labeled, "block", trainFrac = 0.5, nSeeds = 50)
+    assert(res.train.count() + res.test.count() == rows.size, "every row lands on one side")
+    val nullSides = Seq(res.train, res.test).map(_.where($"block".isNull).count())
+    assert(nullSides.sorted == Seq(0L, 3L), s"the null block must land whole on one side: $nullSides")
+    def posRate(df: org.apache.spark.sql.DataFrame): Double =
+      df.agg(sum($"label").cast("double") / count(lit(1))).head.getDouble(0)
+    assert(math.abs(math.abs(posRate(res.train) - posRate(res.test)) - res.gap) < 1e-12,
+      "the applied split must reproduce the search's gap")
+    val res2 = PairClassifier.blockSplitBalanced(labeled.repartition(5), "block", trainFrac = 0.5, nSeeds = 50)
     assert(res2.seed == res.seed && res2.gap == res.gap)
   }
 

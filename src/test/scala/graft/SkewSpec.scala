@@ -56,6 +56,25 @@ class SkewSpec extends AnyFunSuite {
     assert(labels(ck.clusters) == labels(clusters), "checkpointed clusters must equal the cached run's")
   }
 
+  test("a resumed checkpointed run reports the skew counters of the run that built candidates") {
+    val scfg = Synth.Config(nClusters = 40, boilerClusters = 1, boilerSize = 30)
+    val cfg = Dedup.Config(bucketCap = 8)
+    val transcripts = Synth.transcripts(spark, scfg).toDF
+    val wh = java.nio.file.Files.createTempDirectory("graft-skew-resume").toString
+    def counters(r: Dedup.Result) = {
+      val m = r.skew("candidates")
+      (m.oversizedBuckets.value.longValue, m.droppedPairs.value.longValue)
+    }
+    val cold = counters(CheckpointedDedup.run(spark, transcripts, "skew", wh, cfg, verbose = false))
+    assert(cold._1 > 0 && cold._2 > 0, s"the cold run must trip the cap: $cold")
+    val manifest = java.nio.file.Paths.get(wh, "_manifest", "candidates.json")
+    val built = java.nio.file.Files.getLastModifiedTime(manifest)
+    // every stage is skipped on the rerun, candidates included
+    val rerun = counters(CheckpointedDedup.run(spark, transcripts, "skew", wh, cfg, verbose = false))
+    assert(java.nio.file.Files.getLastModifiedTime(manifest) == built, "the rerun must skip candidates")
+    assert(rerun == cold, s"the all-skip rerun must report the cold run's counters: $rerun vs $cold")
+  }
+
   test("embedding near-dup: one hot sign-LSH bucket stays bounded, recall preserved") {
     import spark.implicits._
     val dim = 8
