@@ -22,17 +22,7 @@ import graft.synth.Synth
   */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
-    // strict --key value pairing: a value-less flag would silently shift
-    // every later pair, so malformed argv is an error, not a guess
-    require(args.length % 2 == 0,
-      s"arguments must be --key value pairs; got odd argv ${args.mkString(" ")}")
-    val opts = args
-      .sliding(2, 2)
-      .map {
-        case Array(k, v) if k.startsWith("--") && !v.startsWith("--") => k.drop(2) -> v
-        case Array(k, v) => sys.error(s"malformed argument pair '$k $v': expected --key value")
-      }
-      .toMap
+    val opts = Args.parse(args)
     val out = opts.getOrElse(
       "out",
       sys.error("--out DIR is required (also: --input PARQUET | --synth-clusters N, " +

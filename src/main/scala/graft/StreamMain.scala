@@ -34,18 +34,7 @@ import graft.streaming.IncrementalDedup
   */
 object StreamMain {
   def main(args: Array[String]): Unit = {
-    // strict --key value pairing: a value-less flag would silently shift
-    // every later pair (e.g. `--compact --out X` parses as compact="--out"
-    // and drops out entirely), so malformed argv is an error, not a guess
-    require(args.length % 2 == 0,
-      s"arguments must be --key value pairs; got odd argv ${args.mkString(" ")}")
-    val opts = args
-      .sliding(2, 2)
-      .map {
-        case Array(k, v) if k.startsWith("--") && !v.startsWith("--") => k.drop(2) -> v
-        case Array(k, v) => sys.error(s"malformed argument pair '$k $v': expected --key value")
-      }
-      .toMap
+    val opts = Args.parse(args)
     def req(k: String): String = opts.getOrElse(
       k,
       sys.error(s"--$k is required (usage: --in DIR --stores DIR [--out DIR] " +

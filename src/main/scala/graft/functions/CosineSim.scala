@@ -22,7 +22,7 @@ object CosineSimImpl {
     case ElemLong   => a.getLong(i).toDouble
     case ElemDouble => a.getDouble(i)
     case ElemFloat  => a.getFloat(i).toDouble
-    case _          => a.getInt(i).toDouble
+    case ElemInt    => a.getInt(i).toDouble
   }
 
   /** Left fold of x*x in ascending element order from 0.0 — the same IEEE
@@ -69,7 +69,7 @@ object CosineSimImpl {
   }
 }
 
-/** `cosine_sim(array<numeric>, array<numeric>) -> double` — cosine similarity
+/** `cosine_sim(array<int|bigint|float|double>, array<...>) -> double` — cosine similarity
   * as a native codegen'd expression. Replaces the
   * `aggregate(zip_with(a, b, _*_), 0.0, _+_)` / self-dot HOF composition in
   * Ann.cosine: higher-order functions evaluate their lambda interpreted per
@@ -86,21 +86,24 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  private def elemTypeOf(e: Expression): Int = e.dataType match {
-    case ArrayType(LongType, _)   => CosineSimImpl.ElemLong
-    case ArrayType(DoubleType, _) => CosineSimImpl.ElemDouble
-    case ArrayType(FloatType, _)  => CosineSimImpl.ElemFloat
-    case _                        => CosineSimImpl.ElemInt
+  /** The element types the kernel reads; anything else fails analysis. */
+  private def elemType(t: DataType): Option[Int] = t match {
+    case ArrayType(IntegerType, _) => Some(CosineSimImpl.ElemInt)
+    case ArrayType(LongType, _)    => Some(CosineSimImpl.ElemLong)
+    case ArrayType(FloatType, _)   => Some(CosineSimImpl.ElemFloat)
+    case ArrayType(DoubleType, _)  => Some(CosineSimImpl.ElemDouble)
+    case _                         => None
   }
 
+  private def elemTypeOf(e: Expression): Int = elemType(e.dataType).get
+
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(l: NumericType, _), ArrayType(r: NumericType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cosine_sim expects two numeric arrays, got $other")
-    }
+    if (elemType(left.dataType).isDefined && elemType(right.dataType).isDefined)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        "cosine_sim expects two arrays of int, bigint, float or double, got " +
+          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
 
   override def nullSafeEval(a: Any, b: Any): Any =
     CosineSimImpl.cos(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],

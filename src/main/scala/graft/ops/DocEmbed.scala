@@ -24,6 +24,11 @@ object DocEmbed {
     * reproducible run-to-run on the same data (distributed training with
     * numPartitions > 1 trades that for speed, as the reference's workers=8
     * did — callers opt in via `numPartitions`).
+    *
+    * Convention: `iters` (Word2Vec `maxIter`) defaults to 5, where the
+    * reference trains 100 epochs, so default vectors are less converged
+    * than the reference's. Pass `iters = 100` for reference parity, at
+    * about 20x the SGD cost (one pass over the corpus per iteration).
     */
   def train(
       docs: DataFrame,

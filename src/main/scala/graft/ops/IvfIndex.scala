@@ -56,14 +56,13 @@ object IvfIndex {
     // ALWAYS the partitioned layout — one lineage execution, no emptiness
     // probe (an `isEmpty` pre-check would run the full buildLists shuffle a
     // second time just to pick a branch). A DEGENERATE index (empty lists)
-    // writes no data files at all under partitionBy; load() detects the
-    // file-less directory and reads the schema sidecar below instead of
-    // failing schema inference, so the round trip is schema-exact too.
+    // writes no data files at all under partitionBy, which schema inference
+    // cannot read — so load() reads the lists through the sidecar below.
     h.lists.write.mode("overwrite").partitionBy("cell").parquet(s"$path/lists")
     // 0-row unpartitioned sidecar pinning the lists schema (limit(0) folds
     // to an empty relation — no lineage execution; the write emits one
-    // schema-bearing file): a degenerate index loads back with the EXACT
-    // id/vector types it was built with, not a canonical guess
+    // schema-bearing file): every index loads back with the EXACT
+    // id/vector/cell types it was built with
     h.lists.limit(0).coalesce(1).write.mode("overwrite").parquet(s"$path/lists_schema")
   }
 
@@ -80,18 +79,6 @@ object IvfIndex {
     */
   def add(spark: SparkSession, path: String, vectors: DataFrame, listCap: Int = 100000): Unit = {
     val h = load(spark, path)
-    // migration: an index saved by the pre-sidecar code with EMPTY lists
-    // holds one unpartitioned schema-marker parquet file at the directory
-    // root; appending cell= dirs beside it would mix leaf depths and break
-    // partition discovery on the next load. The marker carries zero rows by
-    // construction (the old code wrote it only for empty lists), so
-    // deleting it loses nothing.
-    val lp = new org.apache.hadoop.fs.Path(s"$path/lists")
-    val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(lp))
-      fs.listStatus(lp).foreach { st =>
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) fs.delete(st.getPath, false)
-      }
     // one write, one lineage execution: nothing-to-add (all rows degenerate,
     // or an untrained index whose frozen-centroid contract says rebuild, not
     // append) appends zero rows — which creates no data files and changes
@@ -101,38 +88,22 @@ object IvfIndex {
       .write.mode("append").partitionBy("cell").parquet(s"$path/lists")
   }
 
-  /** The fallback empty lists frame for a degenerate index saved before the
-    * schema sidecar existed: string ids, double vectors — probe joins
-    * upcast real query columns to these, and an empty probe result is empty
-    * regardless.
+  /** Load a saved index. An index without the `lists_schema` sidecar was
+    * saved by an earlier layout and is refused: rebuild it with `build` +
+    * `save` (there is one reader, no in-place migration).
     */
-  private def emptyLists(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Seq[Double], Int)].toDF("neighbor_id", "nv", "cell")
-  }
-
   def load(spark: SparkSession, path: String): Handle = {
+    val sc = new org.apache.hadoop.fs.Path(s"$path/lists_schema")
+    require(sc.getFileSystem(spark.sessionState.newHadoopConf()).exists(sc),
+      s"IVF index at $path has no lists_schema sidecar: saved by an earlier layout; rebuild the index")
     val centroids = spark.read.parquet(s"$path/centroids")
       .orderBy("cell")
       .collect()
       .map(_.getSeq[Double](1).toArray)
-    val lp = new org.apache.hadoop.fs.Path(s"$path/lists")
-    val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
-    // a degenerate index's zero-row partitionBy write left no data files
-    // (only _SUCCESS); schema inference cannot run on that — read the empty
-    // frame through the schema sidecar so the round trip is schema-exact
-    // (fallback: the canonical empty frame, for pre-sidecar saves)
-    val it = fs.listFiles(lp, true)
-    var hasData = false
-    while (!hasData && it.hasNext) hasData = it.next().getPath.getName.endsWith(".parquet")
-    val lists =
-      if (!hasData) {
-        val sc = new org.apache.hadoop.fs.Path(s"$path/lists_schema")
-        if (fs.exists(sc)) spark.read.parquet(sc.toString) else emptyLists(spark)
-      } else
-        // `cell` comes back as the inferred partition column; pin its type so
-        // the probe join key matches the freshly-built frame exactly
-        spark.read.parquet(s"$path/lists").withColumn("cell", col("cell").cast("int"))
+    // one read path for empty and non-empty lists: the sidecar's schema
+    // types the data columns and the `cell` partition column exactly as
+    // built, and a file-less (degenerate) directory reads as empty
+    val lists = spark.read.schema(spark.read.parquet(sc.toString).schema).parquet(s"$path/lists")
     Handle(centroids, lists)
   }
 

@@ -60,15 +60,8 @@ object TableIO {
   private def manifestPath(warehouse: String, stage: String) =
     new Path(s"$warehouse/_manifest/$stage.json")
 
-  private def manifestJson(warehouse: String, stage: String): Option[String] = {
-    val p = manifestPath(warehouse, stage)
-    val fs = fsOf(p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      Some(try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close())
-    }
-  }
+  private def manifestJson(warehouse: String, stage: String): Option[String] =
+    readText(manifestPath(warehouse, stage), hadoopConf)
 
   /** (fingerprint, rows) of a stage's manifest, if it has one. */
   def readManifest(warehouse: String, stage: String): Option[(String, Long)] =
@@ -84,17 +77,32 @@ object TableIO {
       .flatMap(m => """"([^"]*)":(-?\d+)""".r.findAllMatchIn(m.group(1)).map(c => c.group(1) -> c.group(2).toLong))
       .toMap
 
-  def writeManifest(warehouse: String, m: Manifest): Unit = {
-    val dir = new Path(s"$warehouse/_manifest")
-    val fs = fsOf(dir)
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s".${m.stage}.json.tmp")
+  def writeManifest(warehouse: String, m: Manifest): Unit =
+    writeAtomic(manifestPath(warehouse, m.stage), m.toJson, hadoopConf)
+
+  /** The contents of the small metadata file `p`, if it exists. */
+  private[graft] def readText(p: Path, conf: Configuration): Option[String] = {
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      Some(try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close())
+    }
+  }
+
+  /** Replace the small metadata file `p` with `text` atomically: write a
+    * hidden sibling, then FileContext.rename(OVERWRITE), the atomic-replace
+    * primitive on HDFS and posix local filesystems (FileSystem.rename has
+    * no overwrite mode, and delete-then-rename has a window with no file).
+    * A crash leaves either the old file or the new one, never a truncation.
+    */
+  private[graft] def writeAtomic(p: Path, text: String, conf: Configuration): Unit = {
+    val fs = p.getFileSystem(conf)
+    fs.mkdirs(p.getParent)
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(m.toJson.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    // FileContext.rename(OVERWRITE) is the atomic-replace primitive on HDFS
-    // and posix local filesystems (FileSystem.rename has no overwrite mode)
-    FileContext.getFileContext(dir.toUri, hadoopConf)
-      .rename(tmp, manifestPath(warehouse, m.stage), Options.Rename.OVERWRITE)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    FileContext.getFileContext(p.toUri, conf).rename(tmp, p, Options.Rename.OVERWRITE)
   }
 
   /** Zip packaging sink (S9, Makefile:30-32,45-47: `zip -9 result.json` for

@@ -14,6 +14,13 @@ import org.apache.spark.sql.functions._
   */
 object Eval {
 
+  /** Convention: an empty pair set scores 1.0, so a prediction with no
+    * pairs has precision 1.0 and a truth with no pairs recall 1.0 (nothing
+    * to get wrong, nothing to miss). sklearn's `precision_score` /
+    * `recall_score`, which the reference calls, return 0.0 there
+    * (`zero_division` warning); the two agree whenever both sets are
+    * non-empty.
+    */
   final case class PairwiseScores(
       tp: Long,
       truthPairs: Long,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Cols._
-import graft.pipeline.Dedup
+import graft.pipeline.{Dedup, TableIO}
 
 /** Structured-Streaming extension of the batch pipeline (the reference is
   * pure batch — SURVEY §2.10; this is the documented `Trigger.AvailableNow`
@@ -111,57 +111,49 @@ object IncrementalDedup {
     fs.exists(p)
   }
 
-  /** Persisted store layout contract (`<sigStore>__meta`, one JSON line):
-    * shard counts are baked into the directory layout at first write, so a
+  /** Persisted store layout contract (`<sigStore>__meta`, one JSON line
+    * `{"format":1,"bucketShards":B,"sigShards":S}`).
+    *
+    * Format policy: the stores hold dedup HISTORY (which conversations were
+    * ingested, which pairs carry which ingest stamp) that no rerun over the
+    * current input can recreate, so a store is never migrated in place. A
+    * store whose meta is missing or names another format than
+    * [[StoreFormat]] is refused before anything is read or written; the
+    * only remedy is to rebuild the stores. (Checkpoint tables are derived
+    * data instead: a checkpoint in another layout is rebuilt, see
+    * `Dedup`'s `StageFormat`.)
+    *
+    * Shard counts are baked into the directory layout at first write, so a
     * later run opening the stores with DIFFERENT counts would hash keys into
-    * shards the pruned reads never visit — silently losing candidates. The
-    * meta file makes the mismatch a loud error instead.
+    * shards the pruned reads never visit, silently losing candidates: that
+    * mismatch is refused too. A meta with NO store data beside it pins
+    * nothing (the first-ever run wrote its meta and crashed before any store
+    * write), so a retry with other counts, or over an older meta, rewrites
+    * it for free.
     */
+  private[graft] val StoreFormat = 1
+
   private def metaPath(stores: Stores) = new org.apache.hadoop.fs.Path(stores.sigStore + "__meta")
 
   private[graft] def validateOrWriteMeta(spark: SparkSession, stores: Stores): Unit = {
     val mp = metaPath(stores)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    // write-then-atomic-replace so a crash mid-write can never leave a
-    // truncated meta file — FileContext.rename(OVERWRITE) is the same
-    // atomic-replace primitive TableIO.writeManifest uses (FileSystem
-    // rename has no overwrite mode, and a hand-rolled delete-then-rename
-    // has a crash window with no meta file at all)
-    def writeMeta(): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(mp.toString + "__tmp")
-      val out = fs.create(tmp, true)
-      try out.write(
-        s"""{"bucketShards":${stores.bucketShards},"sigShards":${stores.sigShards}}"""
-          .getBytes("UTF-8"))
-      finally out.close()
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(mp.toUri, spark.sessionState.newHadoopConf())
-        .rename(tmp, mp, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-    if (fs.exists(mp)) {
-      val in = fs.open(mp)
-      val line = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-      val m = """"bucketShards"\s*:\s*(\d+).*"sigShards"\s*:\s*(\d+)""".r.unanchored
-      line match {
-        case m(b, s) if b.toInt == stores.bucketShards && s.toInt == stores.sigShards => ()
-        case m(b, s) =>
-          // a meta with NO store data pins nothing: the first-ever run wrote
-          // its meta and crashed before any store write — a retry with
-          // different shard counts is a free relayout, not a corruption; the
-          // mismatch is only fatal once data exists in the pinned layout
-          if (!storeExists(spark, stores.sigStore) && !storeExists(spark, stores.bucketStore))
-            writeMeta()
-          else throw new IllegalArgumentException(
-            s"store at ${stores.sigStore} was laid out with bucketShards=$b/sigShards=$s; " +
-              s"this run configured ${stores.bucketShards}/${stores.sigShards} — shard counts are " +
-              "part of the on-disk layout and cannot change without a rebuild")
-        case _ => sys.error(s"unreadable store meta $mp: '$line'")
-      }
-    } else if (storeExists(spark, stores.sigStore) || storeExists(spark, stores.bucketStore)) {
-      sys.error(s"stores at ${stores.sigStore} exist without a layout meta file ($mp): " +
-        "created by an incompatible (pre-sharding) version — rebuild the stores")
-    } else {
-      writeMeta()
+    val conf = spark.sessionState.newHadoopConf()
+    val meta = TableIO.readText(mp, conf).map(_.trim)
+    def hasData = storeExists(spark, stores.sigStore) || storeExists(spark, stores.bucketStore)
+    val layout =
+      s"""{"format":$StoreFormat,"bucketShards":${stores.bucketShards},"sigShards":${stores.sigShards}}"""
+    val m = """"format":(\d+),"bucketShards":(\d+),"sigShards":(\d+)""".r.unanchored
+    meta match {
+      case Some(`layout`)   => ()
+      case _ if !hasData    => TableIO.writeAtomic(mp, layout, conf)
+      case Some(m(f, b, s)) if f.toInt == StoreFormat =>
+        throw new IllegalArgumentException(
+          s"store at ${stores.sigStore} was laid out with bucketShards=$b/sigShards=$s; " +
+            s"this run configured ${stores.bucketShards}/${stores.sigShards} — shard counts are " +
+            "part of the on-disk layout and cannot change without a rebuild")
+      case _ =>
+        sys.error(s"stores at ${stores.sigStore} are not in store format $StoreFormat (layout meta $mp: " +
+          s"${meta.getOrElse("missing")}): written by an incompatible version; rebuild the stores")
     }
   }
 
@@ -187,53 +179,25 @@ object IncrementalDedup {
     *     delete-then-rename swap has a window with no file at all, but a
     *     marker name is atomic — older markers are pruned best-effort
     *     after the new one is durable, and leftovers only waste bytes.
-    * A legacy single-file `<pairStore>__seq` (earlier layout) is folded in
-    * as a floor and deleted only after a durable marker supersedes it.
+    * Invariant: in a format-[[StoreFormat]] store a pair store never exists
+    * without its marker directory, because the first pair append follows a
+    * burn and pruning always keeps the newest marker. So the markers alone
+    * are the high-water; no marker directory means no stamp yet.
     */
   private def seqDir(stores: Stores) = new org.apache.hadoop.fs.Path(stores.pairStore + "__seq.d")
-  private def seqLegacy(stores: Stores) = new org.apache.hadoop.fs.Path(stores.pairStore + "__seq")
 
   private[graft] def seqHighWater(spark: SparkSession, stores: Stores): Long = {
     val dir = seqDir(stores)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val markerMax =
-      if (!fs.exists(dir)) Long.MinValue
-      else fs.listStatus(dir).iterator.map(_.getPath.getName).collect {
-        case n if n.startsWith("v") => n.drop(1).toLong
-      }.foldLeft(Long.MinValue)(math.max)
-    val legacy = seqLegacy(stores)
-    val legacyVal =
-      if (!fs.exists(legacy)) Long.MinValue
-      else {
-        val in = fs.open(legacy)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong finally in.close()
-      }
-    val fromMarkers = math.max(markerMax, legacyVal)
-    // Pre-marker-era store (pairs carry ingest_seq stamps, but neither the
-    // marker dir nor the legacy file exists): floor at the store's own
-    // persisted max. Without this, a caller whose sequence restarted at 0
-    // (fresh stream checkpoint against an upgraded store) would stamp new
-    // pairs BELOW the refresh high-water and hide them from every
-    // incremental refresh. One aggregate, paid only until the first burn
-    // creates the marker dir.
-    if (fromMarkers != Long.MinValue || !storeExists(spark, stores.pairStore)) fromMarkers
-    else {
-      // an even older store may predate the ingest_seq column itself; the
-      // aggregate below would then throw AnalysisException and turn a
-      // recoverable upgrade path into a hard failure — treat column absence
-      // as "no stamps yet" (Long.MinValue), same as an empty store
-      val df = spark.read.parquet(stores.pairStore)
-      if (!df.columns.contains("ingest_seq")) Long.MinValue
-      else {
-        val r = df.agg(max($"ingest_seq")).head
-        if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-      }
-    }
+    if (!fs.exists(dir)) Long.MinValue
+    else fs.listStatus(dir).iterator.map(_.getPath.getName).collect {
+      case n if n.startsWith("v") => n.drop(1).toLong
+    }.foldLeft(Long.MinValue)(math.max)
   }
 
   /** Persist `v` as the new high-water (see [[seqHighWater]] for the crash
     * contract). Marker creation is the durability point; pruning older
-    * markers and the legacy file afterwards is best-effort cleanup.
+    * markers afterwards is best-effort cleanup.
     */
   private[graft] def burnSeqHighWater(spark: SparkSession, stores: Stores, v: Long): Unit = {
     val dir = seqDir(stores)
@@ -244,8 +208,6 @@ object IncrementalDedup {
       val n = st.getPath.getName
       if (n.startsWith("v") && n.drop(1).toLong < v) fs.delete(st.getPath, false)
     }
-    val legacy = seqLegacy(stores)
-    if (fs.exists(legacy)) fs.delete(legacy, false)
   }
 
   /** Per-batch cap visibility — the incremental analogue of the batch
@@ -542,6 +504,8 @@ object IncrementalDedup {
       assembleIdleGapSec: Option[Long] = None,
       assembleWatermarkDelay: String = "1 hour"
   ): Unit = {
+    // refuse stores in another format before the stream writes its checkpoint
+    validateOrWriteMeta(spark, stores)
     val schema = spark.read.parquet(inputDir).schema
     val stream = spark.readStream
       .schema(schema)

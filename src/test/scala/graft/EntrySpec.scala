@@ -22,6 +22,16 @@ class EntrySpec extends AnyFunSuite {
     assert(stale.isEmpty, s"oracleSql keys without a query: ${stale.toSeq.sorted}")
   }
 
+  test("mains refuse argv that is not strict --key value pairs") {
+    assert(Args.parse(Array("--out", "X", "--cores", "2")) == Map("out" -> "X", "cores" -> "2"))
+    val odd = intercept[IllegalArgumentException](Args.parse(Array("--in", "I", "--compact")))
+    assert(odd.getMessage.contains("odd argv"), odd.getMessage)
+    // a value-less flag would shift every later pair: compact="--out", out dropped
+    val shifted = intercept[RuntimeException](Args.parse(Array("--compact", "--out", "X", "true")))
+    assert(shifted.getMessage.contains("malformed argument pair '--compact --out'"), shifted.getMessage)
+    intercept[IllegalArgumentException](Args.parse(Array("--compact", "--out", "X")))
+  }
+
   test("entry returns non-empty cluster assignment") {
     val df = SparkEntry.entry(spark)
     assert(df.columns.toSet == Set("conv_id", "component"))

@@ -67,6 +67,20 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(one[Double]("SELECT cosine_sim(array(0.0F, 0.0F), array(1.0F, 2.0F))") == 0.0)
   }
 
+  test("cosine_sim rejects element types it cannot read at analysis time") {
+    val bad = Seq(
+      "SELECT cosine_sim(array(1S, 2S), array(2S, 1S))",
+      "SELECT cosine_sim(array(1Y, 2Y), array(2.0D, 1.0D))",
+      "SELECT cosine_sim(array(1.5BD, 2.5BD), array(2.5BD, 1.5BD))")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cos-tinyint").toString + "/t"
+    Seq((Seq[Byte](1, 2, 3), Seq[Byte](3, 2, 1))).toDF("a", "b").write.parquet(tmp)
+    spark.read.parquet(tmp).createOrReplaceTempView("ext_cos_tinyint")
+    (bad :+ "SELECT cosine_sim(a, b) FROM ext_cos_tinyint").foreach { q =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(e.getMessage.contains("cosine_sim"), s"$q: ${e.getMessage.take(300)}")
+    }
+  }
+
   test("non-literal scalar parameters fail with a clear analysis-time error") {
     val e = intercept[Exception] {
       spark.sql("SELECT content_anchors('abcdefgh', 1 + length('abc'), 4)").collect()

@@ -195,8 +195,8 @@ class OpsSpec extends AnyFunSuite {
     import spark.implicits._
     // every row fails the finiteVecs gate -> no trainable dimension -> an
     // UNTRAINED index; it must still be persistable (a zero-row partitionBy
-    // write creates no data files, and load() substitutes the canonical
-    // empty frame for the file-less directory) and probe/add must
+    // write creates no data files, and load() reads the file-less
+    // directory through the schema sidecar) and probe/add must
     // return/append nothing instead of throwing
     val bad = Seq(
       ("b0", null.asInstanceOf[Seq[Double]]),
@@ -216,32 +216,8 @@ class OpsSpec extends AnyFunSuite {
     IvfIndex.add(spark, path, mkVecs(8, 16, 7L).toDF("id", "vec"))
     assert(IvfIndex.topK(probes, IvfIndex.load(spark, path), k = 3, nProbe = 2).count() == 0)
 
-    // pre-sidecar migration: an index saved by the old code with EMPTY
-    // lists holds one unpartitioned schema-marker parquet file at the lists
-    // root; add() must delete it before the partitioned append or the mixed
-    // leaf depths break partition discovery on the next load
-    val corpusM = mkVecs(60, 16, 11L).toDF("id", "vec").cache()
-    val centroidsM = Ann.trainCentroids(corpusM, nCells = 4)
-    val pathM = java.nio.file.Files.createTempDirectory("graft-ivf-legacy").toString + "/idx"
-    IvfIndex.save(spark, IvfIndex.Handle(centroidsM, Ann.buildLists(corpusM.limit(0), centroidsM)), pathM)
-    // simulate the OLD layout: plant a root-level empty marker file
-    Ann.buildLists(corpusM.limit(0), centroidsM)
-      .coalesce(1).write.mode("append").parquet(s"$pathM/lists")
-    val lpM = new org.apache.hadoop.fs.Path(s"$pathM/lists")
-    val fsM = lpM.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fsM.listStatus(lpM).exists(st => st.isFile && st.getPath.getName.endsWith(".parquet")),
-      "test setup: the planted legacy marker file must exist at the lists root")
-    IvfIndex.add(spark, pathM, corpusM)
-    val viaLegacy = IvfIndex.topK(probes, IvfIndex.load(spark, pathM), k = 3, nProbe = 2)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
-    val monoM = IvfIndex.topK(probes, IvfIndex.Handle(centroidsM, Ann.buildLists(corpusM, centroidsM)),
-      k = 3, nProbe = 2)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(viaLegacy == monoM, "legacy marker migration must leave a probeable partitioned index")
-
     // schema sidecar: a degenerate index round-trips the EXACT lists
-    // schema (bigint ids here — the pre-sidecar canonical fallback would
-    // come back as string)
+    // schema (bigint ids here, not a canonical string guess)
     val badLong = Seq((7L, null.asInstanceOf[Seq[Double]])).toDF("id", "vec")
     val hLong = IvfIndex.build(badLong, nCells = 4)
     val pathLong = java.nio.file.Files.createTempDirectory("graft-ivf-degenL").toString + "/idx"
@@ -266,8 +242,21 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
     val got = IvfIndex.topK(probes, IvfIndex.load(spark, path2), k = 3, nProbe = 2)
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(got == mono, s"marker-upgraded index must probe like a monolithic build; " +
-      s"diff=${(mono -- got).take(3)} | ${(got -- mono).take(3)}")
+    assert(got == mono, "an index whose first installment was empty must probe like a " +
+      s"monolithic build; diff=${(mono -- got).take(3)} | ${(got -- mono).take(3)}")
+  }
+
+  test("IvfIndex: an index saved without the lists_schema sidecar is refused, not migrated") {
+    import graft.ops.IvfIndex
+    val corpus = mkVecs(60, 16, 9L).toDF("id", "vec").cache()
+    val centroids = Ann.trainCentroids(corpus, nCells = 4)
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-nosidecar").toString + "/idx"
+    IvfIndex.save(spark, IvfIndex.Handle(centroids, Ann.buildLists(corpus.limit(0), centroids)), path)
+    val sc = new org.apache.hadoop.fs.Path(s"$path/lists_schema")
+    assert(sc.getFileSystem(spark.sessionState.newHadoopConf()).delete(sc, true))
+    val e = intercept[IllegalArgumentException](IvfIndex.load(spark, path))
+    assert(e.getMessage.contains("rebuild the index"), e.getMessage)
+    intercept[IllegalArgumentException](IvfIndex.add(spark, path, corpus))
   }
 
   test("embedding near-dup pairs finds planted duplicates") {

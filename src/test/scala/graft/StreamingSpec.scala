@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -398,7 +400,7 @@ class StreamingSpec extends AnyFunSuite {
       s"refresh after a sequence restart must equal the full re-cluster ($diff rows differ)")
   }
 
-  test("a stamp burned by a crashed batch is never reused; legacy single-file high-water is a floor") {
+  test("a stamp burned by a crashed batch is never reused") {
     // crash contract: processBatch BURNS the stamp before appending pairs, so
     // a crash between burn and append leaves a stamp with no pairs. A later,
     // different batch must not reuse it — refreshClusters' `seen` comes from
@@ -429,42 +431,6 @@ class StreamingSpec extends AnyFunSuite {
     val (incr, _) = IncrementalDedup.refreshClusters(spark, stores, Some((labels0.cache(), seen0)))
     val full = IncrementalDedup.clusterNow(spark, stores)
     assert(incr.exceptAll(full).count() + full.exceptAll(incr).count() == 0)
-
-    // legacy layout: a store written before the marker-directory format
-    // carries `<pairStore>__seq` as a single value file — honored as a floor
-    // and superseded (deleted) once a marker is durable
-    val tmp2 = Files.createTempDirectory("graft-seqlegacy").toString
-    val stores2 = IncrementalDedup.Stores(s"$tmp2/sigs", s"$tmp2/pairs")
-    val legacy = new org.apache.hadoop.fs.Path(s"$tmp2/pairs__seq")
-    val fs = legacy.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(legacy, true)
-    out.write("42".getBytes("UTF-8")); out.close()
-    assert(IncrementalDedup.seqHighWater(spark, stores2) == 42L)
-    IncrementalDedup.processBatch(
-      spark, transcripts.drop("part"), stores2, cfg, batchSeq = 0L)
-    assert(IncrementalDedup.seqHighWater(spark, stores2) == 43L)
-    assert(!fs.exists(legacy), "the legacy file is cleaned once a marker supersedes it")
-
-    // pre-marker-era store: pairs carry ingest_seq stamps but NEITHER the
-    // marker dir NOR the legacy file exists (upgraded deployment, fresh
-    // stream checkpoint). The high-water must floor at the store's own max
-    // stamp, or a caller sequence restarted at 0 stamps new pairs below the
-    // refresh high-water and hides them from every incremental refresh.
-    val tmp3 = Files.createTempDirectory("graft-seqpremark").toString
-    val stores3 = IncrementalDedup.Stores(s"$tmp3/sigs", s"$tmp3/pairs")
-    val (_, p3a) = IncrementalDedup.processBatch(
-      spark, transcripts.where(col("part") === 0).drop("part"), stores3, cfg, batchSeq = 9L)
-    assert(p3a > 0)
-    val markerDir = new org.apache.hadoop.fs.Path(s"$tmp3/pairs__seq.d")
-    assert(fs.delete(markerDir, true), "test setup: marker dir must exist to delete")
-    assert(IncrementalDedup.seqHighWater(spark, stores3) == 9L,
-      "without marker or legacy file the store's max ingest_seq is the floor")
-    val (_, p3b) = IncrementalDedup.processBatch(
-      spark, transcripts.where(col("part") === 1).drop("part"), stores3, cfg, batchSeq = 0L)
-    assert(p3b > 0)
-    val maxSeq3 = spark.read.parquet(stores3.pairStore)
-      .agg(max(col("ingest_seq"))).first().getLong(0)
-    assert(maxSeq3 == 10L, s"pre-marker floor must advance the stamp past 9 (got $maxSeq3)")
   }
 
   test("a meta written before any store data does not pin the layout (first-run crash retry)") {
@@ -544,7 +510,45 @@ class StreamingSpec extends AnyFunSuite {
     val e2 = intercept[RuntimeException] {
       IncrementalDedup.validateOrWriteMeta(spark, stores)
     }
-    assert(e2.getMessage.contains("without a layout meta"), e2.getMessage)
+    assert(e2.getMessage.contains("rebuild the stores"), e2.getMessage)
+  }
+
+  test("stores in an older format are refused before anything is read or written") {
+    val cfg = Dedup.Config()
+    val scfg = Synth.Config(nClusters = 40, boilerClusters = 1, boilerSize = 4)
+    val transcripts = Synth.transcripts(spark, scfg).toDF
+      .withColumn("part", pmod(xxhash64(col("conv_id")), lit(2))).cache()
+    val tmp = Files.createTempDirectory("graft-oldformat").toString
+    val stores = IncrementalDedup.Stores(s"$tmp/sigs", s"$tmp/pairs")
+    val (_, p0) = IncrementalDedup.processBatch(
+      spark, transcripts.where(col("part") === 0).drop("part"), stores, cfg, batchSeq = 0L)
+    assert(p0 > 0, "test setup: the first batch must write every store")
+    // the unversioned meta of the earlier layout (data files are unchanged)
+    val mp = new org.apache.hadoop.fs.Path(s"$tmp/sigs__meta")
+    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
+    val out = fs.create(mp, true)
+    out.write("""{"bucketShards":64,"sigShards":64}""".getBytes("UTF-8")); out.close()
+    def snapshot(): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(tmp)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+      finally walk.close()
+    }
+    val before = snapshot()
+    val e = intercept[RuntimeException] {
+      IncrementalDedup.processBatch(
+        spark, transcripts.where(col("part") === 1).drop("part"), stores, cfg, batchSeq = 1L)
+    }
+    assert(e.getMessage.contains("rebuild the stores"), e.getMessage)
+    // the streaming driver refuses before its checkpoint is created
+    val inDir = s"${Files.createTempDirectory("graft-oldformat-in")}/in"
+    transcripts.where(col("part") === 1).drop("part").write.parquet(inDir)
+    val e2 = intercept[RuntimeException](IncrementalDedup.runAvailableNow(spark, inDir, stores, cfg))
+    assert(e2.getMessage.contains("rebuild the stores"), e2.getMessage)
+    val after = snapshot()
+    assert(after.keySet == before.keySet, s"files added or removed: ${after.keySet diff before.keySet}")
+    assert(before.forall { case (f, bytes) => after(f) == bytes }, "a store file changed")
   }
 
   test("compaction crash between renames is recovered; stale asides are cleaned") {
