@@ -33,9 +33,11 @@ object Sessions {
       // AQE coalesces on COMPRESSED shuffle bytes; transcript text compresses
       // ~5x, so the default 64MB advisory collapses real 100MB+ stages to 1-2
       // partitions and serializes them. 8MB advisory + a one-partition-per-
-      // core floor keeps CPU scaling without losing AQE skew handling.
+      // core floor keeps CPU scaling without losing AQE skew handling. The
+      // floor is the default parallelism, which AQE coalescing falls back to
+      // when no minimum partition count is set.
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", parts.toString)
+      .config("spark.default.parallelism", parts.toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

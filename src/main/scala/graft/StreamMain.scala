@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+import org.apache.spark.sql.SparkSession
 
 import graft.Cols._
 import graft.pipeline.Dedup
@@ -49,17 +49,17 @@ object StreamMain {
     val cfg = Dedup.Config(threshold = opts.get("threshold").map(_.toDouble).getOrElse(0.70))
     val stores = IncrementalDedup.Stores(s"$storesDir/sigs", s"$storesDir/pairs")
 
-    // smoke/demo seeding: append the deterministic synthetic corpus to the
-    // watched directory in several files, so one self-contained invocation
-    // exercises ingest -> stores -> clustering (mirrors PipelineMain).
+    // smoke/demo seeding: write the deterministic synthetic corpus to an
+    // input directory that holds no parquet yet, in 8 files, so one
+    // self-contained invocation exercises ingest -> stores -> clustering over
+    // two micro-batches (mirrors PipelineMain); a rerun reads what is there.
     // Files are split BY CONVERSATION — the plain ingest contract; a
     // row-shuffled split would feed partial conversations (use
     // --assemble-gap for ingests shaped like that)
-    opts.get("synth-clusters").map(_.toInt).foreach { n =>
+    opts.get("synth-clusters").map(_.toInt).filterNot(_ => hasParquet(spark, inDir)).foreach { n =>
       graft.synth.Synth.transcripts(spark, graft.synth.Synth.Config(nClusters = n))
         .toDF()
-        .withColumn("part", pmod(xxhash64($"conv_id"), lit(8)))
-        .repartition(8, $"part").drop("part")
+        .repartition(8, $"conv_id")
         .write.mode("append").parquet(inDir)
     }
 
@@ -88,5 +88,11 @@ object StreamMain {
         f""""wall_sec":$wall%.2f,"stores":"$storesDir"}"""
     )
     spark.stop()
+  }
+
+  private def hasParquet(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
   }
 }

@@ -35,6 +35,18 @@ object MinHashImpl {
     out
   }
 
+  /** `v mod P` for `0 <= v < 2^62 + 2^31` (every `a*x+b` with a, b < P and
+    * x <= P) by Mersenne folding: 2^31 = 1 (mod P), so adding the high bits
+    * to the low 31 keeps the residue. Two folds bring v below P + 2, one
+    * subtraction below P. Bit-identical to `v % P` on that range, without the
+    * 64-bit division.
+    */
+  @inline def mod(v: Long): Long = {
+    var h = (v & P) + (v >>> 31)
+    h = (h & P) + (h >>> 31)
+    if (h >= P) h - P else h
+  }
+
   /** Signature over a set of shingle hashes (32- or 64-bit elements).
     * Empty set -> all Int.MaxValue (two empty docs still collide, handled at
     * verify).
@@ -50,7 +62,7 @@ object MinHashImpl {
       val x = ((x64 ^ (x64 >>> 32)) & 0x7fffffffL) // fold to 31 bits
       var i = 0
       while (i < nPerm) {
-        val h = (coeffs(2 * i) * x + coeffs(2 * i + 1)) % P
+        val h = mod(coeffs(2 * i) * x + coeffs(2 * i + 1))
         if (h < sig(i)) sig(i) = h.toInt
         i += 1
       }

@@ -11,26 +11,41 @@ object SimHashImpl {
   /** Charikar SimHash over token hashes (multiplicity = weight): each of the
     * 64 bit-planes accumulates +1/-1 per token, sign gives the fingerprint
     * bit. 32-bit inputs are re-mixed to spread over all 64 planes.
+    *
+    * Bit-sliced: bit b of `c(l)` is bit l of plane b's count of set bits, so
+    * one token is a ripple-carry add of its 64 bits into all 64 counters at
+    * once. Plane b's +1/-1 sum is `2*count_b - n`; its bit is set iff that
+    * is > 0 (a tie gives 0), as in the per-plane formulation.
     */
   def simhash64(tokenHashes: ArrayData, intElems: Boolean): Long = {
-    val acc = new Array[Int](64)
+    val c = new Array[Long](32) // counts < 2^31: numElements is an Int
+    var levels = 0 // counters in use
     val n = tokenHashes.numElements()
     var j = 0
     while (j < n) {
-      val h =
+      var carry =
         if (intElems) MinHashImpl.mix64(tokenHashes.getInt(j).toLong)
         else tokenHashes.getLong(j)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
-        b += 1
+      var l = 0
+      while (carry != 0L) {
+        val t = c(l) & carry
+        c(l) ^= carry
+        carry = t
+        l += 1
       }
+      if (l > levels) levels = l
       j += 1
     }
     var out = 0L
     var b = 0
     while (b < 64) {
-      if (acc(b) > 0) out |= (1L << b)
+      var count = 0L
+      var l = 0
+      while (l < levels) {
+        count |= ((c(l) >>> b) & 1L) << l
+        l += 1
+      }
+      if (2 * count > n) out |= (1L << b)
       b += 1
     }
     out

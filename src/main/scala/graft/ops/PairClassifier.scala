@@ -6,7 +6,7 @@ import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{text => T, SortedIntersectSize}
+import graft.functions.{text => T, SignatureAgreement, SortedIntersectSize}
 
 /** Pair classifier — the reference's supervised scoring stage re-expressed in
   * spark.ml (classifier.py:287-357): RandomForest + gradient-boosted-trees
@@ -30,11 +30,7 @@ object PairClassifier {
     val side = sigs
       .join(docs.select(col("conv_id"), col("n_turns")), "conv_id")
       .select(col("conv_id"), col("shingles"), col("sig"), col("simhash"), col("n_turns"))
-    val est = aggregate(
-      zip_with(col("sig1"), col("sig2"), (x, y) => (x === y).cast("int")),
-      lit(0),
-      (a, x) => a + x
-    ).cast("double") / size(col("sig1"))
+    val est = SignatureAgreement(col("sig1"), col("sig2")).cast("double") / size(col("sig1"))
     val inter = SortedIntersectSize(col("sh1"), col("sh2")).cast("double")
     val uni = (size(col("sh1")) + size(col("sh2"))).cast("double") - inter
     pairs

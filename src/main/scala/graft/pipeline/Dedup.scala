@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
 import graft.Cols._
-import graft.functions.{text => T, MinHashSignature, SimHash64, SortedIntersectSize}
+import graft.functions.{text => T, BandKeys, MinHashSignature, SignatureAgreement, SimHash64, SortedIntersectSize}
 import graft.plans.ConnectedComponents
 
 /** End-to-end near-duplicate detection + clustering over transcripts
@@ -260,19 +260,12 @@ object Dedup {
     * the batch candidate generator (`id` = `uid`) and the incremental bucket
     * store (`id` = `conv_id`, stable across batches).
     */
-  private[graft] def lshBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame = {
-    val r = cfg.rows
+  private[graft] def lshBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame =
     sigs.select(
-      explode(
-        transform(
-          sequence(lit(0), lit(cfg.bands - 1)),
-          b => xxhash64(slice($"sig", b * r + 1, lit(r)), b)
-        )
-      ).as("bucket"),
+      explode(BandKeys($"sig", cfg.bands, cfg.rows)).as("bucket"),
       id.as("id"),
       lit(0L).as("payload")
     )
-  }
 
   /** (bucket, id, payload=simhash) rows of the SimHash chunk pass. */
   private[graft] def simhashBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame =
@@ -371,11 +364,7 @@ object Dedup {
   private[graft] def verifyOn(key: String, cands: DataFrame, sigs: DataFrame, cfg: Config): DataFrame = {
     def side(i: Int) =
       sigs.select(col(key).as(s"id$i"), $"conv_id".as(s"c$i"), $"sig".as(s"sig$i"), $"shingles".as(s"sh$i"))
-    val est = aggregate(
-      zip_with($"sig1", $"sig2", (x, y) => (x === y).cast("int")),
-      lit(0),
-      (acc, x) => acc + x
-    ).cast("double") / cfg.numPerms
+    val est = SignatureAgreement($"sig1", $"sig2").cast("double") / cfg.numPerms
     val inter = SortedIntersectSize($"sh1", $"sh2").cast("double")
     val uni = (size($"sh1") + size($"sh2")).cast("double") - inter
     cands

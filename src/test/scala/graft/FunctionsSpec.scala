@@ -4,7 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{text => T, MinHashImpl, MinHashSignature, SimHash64}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+
+import graft.functions.{text => T, BandKeys, MinHashImpl, MinHashSignature, SignatureAgreement, SimHash64,
+  SimHashImpl}
 
 /** Unit + property tests for the custom Catalyst expressions and text
   * primitives (SURVEY.md §5 test plan).
@@ -208,5 +212,156 @@ class FunctionsSpec extends AnyFunSuite {
       .select(MinHashSignature(array(col("id"), col("id") * 2), 16, 1L).as("sig"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project"), plan) // '*' prefix = inside WholeStageCodegen
+  }
+
+  // Each rewritten kernel is compared with the formulation it replaced, kept
+  // here as the reference: stores and pinned hashes hold their values, so
+  // "close" is not enough.
+
+  /** Runs `check` on `input.select(cols)` evaluated twice: interpreted (the
+    * optimizer folds a projection over a local relation into its rows) and
+    * through generated code (over a shuffle the projection is planned, and
+    * compiled whole-stage or, next to a reference lambda, as an unsafe
+    * projection).
+    */
+  private def bothPaths(input: DataFrame, cols: Column*)(check: DataFrame => Unit): Unit = {
+    val folded = input.select(cols: _*)
+    check(folded)
+    assert(!folded.queryExecution.executedPlan.toString.contains("Project"))
+    val generated = input.repartition(2).select(cols: _*)
+    check(generated)
+    assert(generated.queryExecution.executedPlan.toString.contains("Project"))
+  }
+
+  /** MinHash with the 64-bit `% P` the Mersenne fold replaced. */
+  private def refMinHash(xs: Seq[Long], cs: Array[Long]): Seq[Int] = {
+    val sig = Array.fill(cs.length / 2)(Int.MaxValue)
+    xs.foreach { x64 =>
+      val x = (x64 ^ (x64 >>> 32)) & 0x7fffffffL
+      sig.indices.foreach { i =>
+        val h = (cs(2 * i) * x + cs(2 * i + 1)) % MinHashImpl.P
+        if (h < sig(i)) sig(i) = h.toInt
+      }
+    }
+    sig.toSeq
+  }
+
+  test("minhash Mersenne fold equals % P: edge arithmetic and random shingle arrays") {
+    val P = MinHashImpl.P
+    val edge = for (a <- Seq(1L, 2L, P - 1); x <- Seq(0L, 1L, P - 1, P); b <- Seq(0L, 1L, P - 1))
+      yield a * x + b
+    val rnd = new scala.util.Random(11)
+    val random = Seq.fill(100000)((1 + rnd.nextLong(P - 1)) * rnd.nextLong(P + 1) + rnd.nextLong(P))
+    (edge ++ random ++ Seq(P - 1, P, P + 1, 2 * P - 1, 2 * P)).foreach { v =>
+      assert(MinHashImpl.mod(v) == v % P, s"v=$v")
+    }
+    val cs = MinHashImpl.coeffs(128, 42L)
+    val longs: Seq[Seq[Long]] = Seq(Seq.empty[Long], Seq(0L), Seq(-1L, Long.MinValue, Long.MaxValue)) ++
+      Seq.fill(40)(Seq.fill(rnd.nextInt(300))(rnd.nextLong()))
+    val ints: Seq[Seq[Int]] = Seq(Seq.empty[Int], Seq(0), Seq(-1, Int.MinValue, Int.MaxValue)) ++
+      Seq.fill(40)(Seq.fill(rnd.nextInt(300))(rnd.nextInt()))
+    bothPaths(longs.toDF("sh"), $"sh", MinHashSignature($"sh", 128, 42L)) { df =>
+      df.collect().foreach(r => assert(r.getSeq[Int](1) == refMinHash(r.getSeq[Long](0), cs)))
+    }
+    bothPaths(ints.toDF("sh"), $"sh", MinHashSignature($"sh", 128, 42L)) { df =>
+      df.collect().foreach(r => assert(r.getSeq[Int](1) == refMinHash(r.getSeq[Int](0).map(_.toLong), cs)))
+    }
+  }
+
+  /** SimHash with the per-plane +1/-1 loop the bit-sliced counters replaced. */
+  private def refSimHash(hs: Seq[Long]): Long = {
+    val acc = new Array[Int](64)
+    hs.foreach(h => (0 until 64).foreach(b => if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1))
+    (0 until 64).foldLeft(0L)((out, b) => if (acc(b) > 0) out | (1L << b) else out)
+  }
+
+  test("simhash bit-sliced counters equal the per-plane loop: n = 0, 1, ties, n > 2^16") {
+    val rnd = new scala.util.Random(13)
+    val h = rnd.nextLong()
+    val longs: Seq[Seq[Long]] = Seq(
+      Seq.empty, Seq(h), Seq(-1L), Seq(h, ~h), Seq(h, h, ~h, ~h, 0L, -1L), // every plane ties
+      Seq.fill(2)(rnd.nextLong()), // ~half the planes tie
+      Seq.fill(70000)(rnd.nextLong()),
+      Seq.fill(40000)(h) ++ Seq.fill(40000)(~h), // ties at n > 2^16
+      Seq.fill(70001)(h) // every counter level in use
+    ) ++ Seq.fill(30)(Seq.fill(rnd.nextInt(500))(rnd.nextLong()))
+    val x = rnd.nextInt()
+    val ints: Seq[Seq[Int]] = Seq(
+      Seq.empty, Seq(x), Seq(x, x), Seq.fill(2)(rnd.nextInt()), Seq.fill(4)(rnd.nextInt()),
+      Seq.fill(70000)(rnd.nextInt()), Seq.fill(70000)(x)
+    ) ++ Seq.fill(30)(Seq.fill(rnd.nextInt(500))(rnd.nextInt()))
+    // direct, including the cases that tie on some plane
+    longs.foreach { xs =>
+      assert(SimHashImpl.simhash64(new GenericArrayData(xs.toArray), intElems = false) == refSimHash(xs))
+    }
+    ints.foreach { xs =>
+      assert(SimHashImpl.simhash64(new GenericArrayData(xs.toArray), intElems = true) ==
+        refSimHash(xs.map(i => MinHashImpl.mix64(i.toLong))))
+    }
+    assert(refSimHash(Seq(h, ~h)) == 0L && refSimHash(Seq.fill(40000)(h) ++ Seq.fill(40000)(~h)) == 0L)
+    // and through Spark
+    bothPaths(longs.toDF("t"), $"t", SimHash64($"t")) { df =>
+      df.collect().foreach(r => assert(r.getLong(1) == refSimHash(r.getSeq[Long](0))))
+    }
+    bothPaths(ints.toDF("t"), $"t", SimHash64($"t")) { df =>
+      df.collect().foreach(r =>
+        assert(r.getLong(1) == refSimHash(r.getSeq[Int](0).map(i => MinHashImpl.mix64(i.toLong)))))
+    }
+  }
+
+  test("signature agreement equals aggregate(zip_with(...)), null on a length mismatch") {
+    val rnd = new scala.util.Random(17)
+    val a = Seq.fill(128)(rnd.nextInt())
+    val rows: Seq[(Seq[Int], Seq[Int])] = Seq(
+      (a, a), // equal: 128
+      (a, a.map(_ + 1)), // disjoint: 0
+      (Seq.empty, Seq.empty), // empty: 0
+      (a, a.take(127)), // different lengths: null
+      (Seq.empty, a.take(1)) // null
+    ) ++ Seq.fill(50)((a, a.map(x => if (rnd.nextBoolean()) x else rnd.nextInt())))
+    val ref = aggregate(zip_with($"s1", $"s2", (x, y) => (x === y).cast("int")), lit(0), (acc, x) => acc + x)
+    val input = rows.zipWithIndex.map { case ((s1, s2), i) => (i, s1, s2) }.toDF("i", "s1", "s2")
+    bothPaths(input, $"i", ref, SignatureAgreement($"s1", $"s2")) { df =>
+      val got = df.collect().sortBy(_.getInt(0)).map(r => (Option(r.get(1)), Option(r.get(2))))
+      got.foreach { case (r, g) => assert(r == g) }
+      assert(got.take(5).map(_._2).toSeq == Seq(Some(128), Some(0), Some(0), None, None))
+    }
+    // a null element (readable from parquet) nulls both, as in the lambda fold
+    val withNull = Seq((Seq[Integer](1, null, 3), Seq[Integer](1, 2, 3))).toDF("s1", "s2")
+      .select(ref.as("ref"), SignatureAgreement($"s1", $"s2").as("got")).head
+    assert(withNull.isNullAt(0) && withNull.isNullAt(1))
+    val bad = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((Seq(1L), Seq(1L))).toDF("s1", "s2").select(SignatureAgreement($"s1", $"s2")).collect()
+    }
+    assert(bad.getMessage.contains("array<int>"), bad.getMessage)
+  }
+
+  test("band keys equal transform/slice/xxhash64 for 1, 32 and 128 bands of 128 perms") {
+    val rnd = new scala.util.Random(19)
+    def ref(sig: Column, bands: Int, r: Int): Column =
+      transform(sequence(lit(0), lit(bands - 1)), b => xxhash64(slice(sig, b * r + 1, lit(r)), b))
+    val sigs = Seq.fill(40)(Seq.fill(rnd.nextInt(400))(rnd.nextLong())).toDF("sh")
+      .select(MinHashSignature($"sh", 128, 42L).as("sig"))
+      .union(Seq(Seq.empty[Int], Seq(1, 2, 3, 4, 5)).toDF("sig")) // shorter than the bands cover
+    for (bands <- Seq(1, 32, 128)) {
+      val r = 128 / bands
+      bothPaths(sigs, ref($"sig", bands, r), BandKeys($"sig", bands, r)) { df =>
+        df.collect().foreach { row =>
+          val got = row.getSeq[Long](1)
+          assert(got.size == bands && got == row.getSeq[Long](0), s"bands=$bands")
+        }
+      }
+    }
+    // a null signature: the composition still yields one key per band
+    val nul = Seq(Option.empty[Seq[Int]]).toDF("sig")
+      .select(ref($"sig", 4, 2).as("ref"), BandKeys($"sig", 4, 2).as("got")).head
+    assert(nul.getSeq[Long](0) == nul.getSeq[Long](1) && nul.getSeq[Long](1).size == 4)
+  }
+
+  test("signature kernels participate in whole-stage codegen") {
+    val sig = MinHashSignature(array(col("id"), col("id") * 2), 16, 1L)
+    val df = spark.range(4).select(SignatureAgreement(sig, sig).as("a"), BandKeys(sig, 4, 4).as("k"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("*(1) Project"), plan)
   }
 }

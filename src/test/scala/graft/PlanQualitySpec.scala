@@ -60,6 +60,29 @@ class PlanQualitySpec extends AnyFunSuite {
     // aggregate, which is inherent to the assembly shape
   }
 
+  test("candidates and verify evaluate no expression interpreted (no HOF, no CodegenFallback)") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val cfg = graft.pipeline.Dedup.Config()
+    val t = graft.synth.Synth.transcripts(spark, graft.synth.Synth.Config(nClusters = 10)).toDF
+    val sigs = graft.pipeline.Dedup.signatures(
+      graft.pipeline.Dedup.shingle(graft.pipeline.Dedup.assemble(t), cfg), cfg).cache()
+    val cands = graft.pipeline.Dedup.candidates(sigs, cfg) // not cached: verify's plan must show it
+    val pairs = graft.pipeline.Dedup.verify(cands, sigs, cfg)
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((name, df) <- Seq("candidates" -> cands, "verify" -> pairs)) {
+      df.collect() // the final adaptive plan is the one that ran
+      val plan = df.queryExecution.executedPlan
+      // the hot-path fallbacks this pins out: ZipWith, ArrayAggregate,
+      // ArrayTransform (every higher-order function is a CodegenFallback)
+      val interpreted = helper.flatMap(plan)(_.expressions.flatMap(_.collect {
+        case e: CodegenFallback => e.prettyName
+      }))
+      assert(interpreted.isEmpty, s"$name evaluates ${interpreted.distinct.mkString(", ")} interpreted:\n$plan")
+    }
+    sigs.unpersist()
+  }
+
   test("aggregations use partial (map-side) aggregation") {
     val df = SparkEntry.queries("q01_agg")(spark, sf)
     val s = df.queryExecution.executedPlan.toString
