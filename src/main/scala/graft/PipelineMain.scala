@@ -29,9 +29,7 @@ object PipelineMain {
         "--cores N, --threshold T, --eval true, --warehouse DIR, --refine true, --profile true)")
     )
     val cores = opts.get("cores").map(_.toInt).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-    // --parts pins shuffle partitions independently of cores (the bench's
-    // N-vs-4N scaling runs pin it so both levels do identical logical work)
-    val spark = Sessions.local(cores, "graft-pipeline", opts.get("parts").map(_.toInt))
+    val spark = Sessions.local(cores, "graft-pipeline")
     val cfg = Dedup.Config(threshold = opts.get("threshold").map(_.toDouble).getOrElse(0.70))
 
     val scfg = Synth.Config(nClusters = opts.get("synth-clusters").map(_.toInt).getOrElse(2000))

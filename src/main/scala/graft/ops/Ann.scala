@@ -103,19 +103,10 @@ object Ann {
       seed: Long = 42L,
       bucketCap: Int = 1024
   ): DataFrame = {
-    val (queries0, corpus0) = (finiteVecs(queries, "vec", dim), finiteVecs(corpus, "vec", dim))
-    def bucketed(df: DataFrame, idCol: String): DataFrame =
-      df.select(
-        col("id").as(idCol),
-        col("vec"),
-        explode(array((0 until nTables).map(t =>
-          struct(lit(t).as("table"), signBucket(col("vec"), dim, nBits, seed + t * 1000003L).as("bucket"))
-        ): _*)).as("tb")
-      ).select(col(idCol), col("vec"), col("tb.table"), col("tb.bucket"))
-
-    val qb = bucketed(queries0, "query_id").withColumnRenamed("vec", "qv")
-    val cb = cappedLists(bucketed(corpus0, "neighbor_id"), "neighbor_id", bucketCap)
-      .withColumnRenamed("vec", "nv")
+    val qb = signTables(queries, dim, nBits, nTables, seed).toDF("query_id", "qv", "table", "bucket")
+    val nb = signTables(corpus, dim, nBits, nTables, seed).toDF("neighbor_id", "nv", "table", "bucket")
+    val cb = Dedup.thinHotKeys(nb, Seq("table", "bucket"),
+      xxhash64(col("neighbor_id"), col("table"), col("bucket")), bucketCap, broadcastHot = true)
     val cands = qb
       .join(cb, Seq("table", "bucket"))
       .where(col("query_id") =!= col("neighbor_id"))
@@ -129,43 +120,28 @@ object Ann {
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
   }
 
-  /** Bound every (table, bucket) inverted list to ~cap members: lists over
-    * the cap keep rows whose per-bucket hash rank falls under it — a
-    * deterministic Bernoulli(cap/bsz) thinning, no sort, no per-key window
-    * (a window over the hot key would serialize it onto one task, the exact
-    * straggler this avoids). The count aggregate map-side-combines, so the
-    * hot key never concentrates rows anywhere.
+  /** (id, vec, table, bucket): the sign bucket of each well-formed vector
+    * in each of `nTables` tables — the rows lshTopK probes and capStats
+    * counts.
     */
-  private def cappedLists(bucketed: DataFrame, idCol: String, cap: Int): DataFrame =
-    bucketed
-      .join(
-        bucketed.groupBy(col("table"), col("bucket")).agg(count(lit(1)).as("bsz"))
-          .where(col("bsz") > cap),
-        Seq("table", "bucket"),
-        "left_outer"
-      )
-      .where(col("bsz").isNull ||
-        pmod(xxhash64(col(idCol), col("table"), col("bucket")), col("bsz")) < cap)
-      .drop("bsz")
-
-  /** Truncation visibility for lshTopK's probe cap: (oversized list count,
-    * total members dropped in expectation). Runs the same count aggregate
-    * over the same finite-filtered corpus the cap sees (a NaN/Inf row never
-    * reaches lshTopK's buckets, so it must not inflate these stats either —
-    * all-NaN rows would otherwise pile into one phantom oversized bucket
-    * per table) — call it when logging an index build, not per query.
-    */
-  def capStats(corpus: DataFrame, dim: Int, nBits: Int, nTables: Int, seed: Long, bucketCap: Int): (Long, Long) = {
-    val b = finiteVecs(corpus, "vec", dim).select(
+  private def signTables(df: DataFrame, dim: Int, nBits: Int, nTables: Int, seed: Long): DataFrame =
+    finiteVecs(df, "vec", dim).select(
       col("id"),
+      col("vec"),
       explode(array((0 until nTables).map(t =>
         struct(lit(t).as("table"), signBucket(col("vec"), dim, nBits, seed + t * 1000003L).as("bucket"))
       ): _*)).as("tb")
-    ).groupBy(col("tb.table"), col("tb.bucket")).agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") > bucketCap)
-      .agg(count(lit(1)), sum(col("bsz") - bucketCap)).collect()(0)
-    (b.getLong(0), if (b.isNullAt(1)) 0L else b.getLong(1))
-  }
+    ).select(col("id"), col("vec"), col("tb.table"), col("tb.bucket"))
+
+  /** Truncation visibility for lshTopK's probe cap: (oversized list count,
+    * total members dropped in expectation), counted over the same
+    * finite-filtered table rows the cap sees (a NaN/Inf row never reaches
+    * lshTopK's buckets, so it must not inflate these stats either — all-NaN
+    * rows would otherwise pile into one phantom oversized bucket per
+    * table). Call it when logging an index build, not per query.
+    */
+  def capStats(corpus: DataFrame, dim: Int, nBits: Int, nTables: Int, seed: Long, bucketCap: Int): (Long, Long) =
+    Dedup.thinCounts(signTables(corpus, dim, nBits, nTables, seed), Seq("table", "bucket"), bucketCap)
 
   /** IVF-style ANN (IVF-Flat, the standard billion-scale layout): a coarse
     * quantizer partitions the corpus into nCells inverted lists; each query
@@ -331,13 +307,10 @@ object Ann {
     if (centroids.isEmpty)
       corpus.select(col("id").as("neighbor_id"), col("vec").as("nv"), lit(0).as("cell")).limit(0)
     else
-      cappedLists(
+      Dedup.thinHotKeys(
         finiteVecs(corpus, "vec", centroids(0).length)
-          .select(col("id").as("neighbor_id"), col("vec"), lit(0).as("table"),
-            assignExpr(centroids)(quantExpr).as("bucket")),
-        "neighbor_id",
-        listCap
-      ).select(col("neighbor_id"), col("vec").as("nv"), col("bucket").as("cell"))
+          .select(col("id").as("neighbor_id"), col("vec").as("nv"), assignExpr(centroids)(quantExpr).as("cell")),
+        Seq("cell"), xxhash64(col("neighbor_id"), lit(0), col("cell")), listCap, broadcastHot = true)
 
   /** Probe path over trained centroids + inverted lists (fresh-built or
     * loaded from a persisted index): nProbe nearest centroids per query,

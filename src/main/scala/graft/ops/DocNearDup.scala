@@ -71,8 +71,7 @@ object DocNearDup {
     val side = sigs.select($"uid", $"shingles")
     val inter = SortedIntersectSize($"sh1", $"sh2")
     Dedup
-      .lshCandidates(sigs, cfg)
-      .distinct()
+      .candidates(sigs, cfg)
       .join(side.toDF("id1", "sh1"), "id1")
       .join(side.toDF("id2", "sh2"), "id2")
       .select(
@@ -117,7 +116,7 @@ object DocNearDup {
       // task failure at corpus scale
       .where($"uid".isNotNull && $"simhash".isNotNull)
     Dedup
-      .simhashCandidates(fp, cfg)
+      .bucketPairs(Dedup.simhashBuckets(fp, cfg, $"uid"), cfg.bucketCap, Dedup.simhashGate(cfg))
       .distinct()
       .join(fp.toDF("id1", "s1"), "id1")
       .join(fp.toDF("id2", "s2"), "id2")

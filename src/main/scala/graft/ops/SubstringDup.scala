@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{AnchorContexts, MinHashImpl}
+import graft.pipeline.Dedup
 
 /** Exact long-substring duplicate pass — the bounded distributed
   * suffix-array variant SURVEY §7.5 step 5 prescribes ("sorted w-gram
@@ -67,13 +68,8 @@ object SubstringDup {
     // count filter (a handful of boilerplate w-grams), so the join
     // broadcasts and the expensive group shuffle below never carries an
     // unbounded group
-    val hot = anchored.groupBy($"anchor").agg(count(lit(1)).as("asz")).where($"asz" > anchorCap)
-    val capped = anchored
-      .join(broadcast(hot), Seq("anchor"), "left")
-      .where($"asz".isNull || pmod(xxhash64($"id", $"anchor", $"off"), $"asz") < anchorCap)
-      .drop("asz")
-
-    capped
+    Dedup
+      .thinHotKeys(anchored, Seq("anchor"), xxhash64($"id", $"anchor", $"off"), anchorCap, broadcastHot = true)
       .as[(Long, String, Int, String)]
       .groupByKey(_._1)
       .flatMapGroups { (anchor, it) =>

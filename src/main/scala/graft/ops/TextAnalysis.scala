@@ -26,12 +26,6 @@ object TextAnalysis {
     */
   private def bind(v: Column)(body: Column => Column): Column = T.let(v)(body)
 
-  /** Per-language stopword hit count over the distinct token set. */
-  def stopwordHits(tokens: Column): Map[String, Column] =
-    profiles.map { case (lang, words) =>
-      lang -> size(array_intersect(array_distinct(tokens), array(words.map(lit): _*)))
-    }
-
   /** per-language hits given an ALREADY-distinct bound token set */
   private def hitsOnDistinct(dt: Column): Seq[(String, Column)] =
     profiles.toSeq.map { case (lang, words) =>

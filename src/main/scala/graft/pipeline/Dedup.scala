@@ -42,6 +42,8 @@ object Dedup {
       substringStride: Int = 32
   ) {
     require(numPerms % bands == 0, "bands must divide numPerms")
+    // payload-0 LSH/anchor rows pass the one SimHash gate only under a bound >= 0
+    require(simhashMaxHamming >= 0, "simhashMaxHamming must be >= 0")
     def rows: Int = numPerms / bands
   }
 
@@ -260,15 +262,17 @@ object Dedup {
     * the batch candidate generator (`id` = `uid`) and the incremental bucket
     * store (`id` = `conv_id`, stable across batches).
     */
-  private[graft] def lshBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame =
+  private[graft] def lshBuckets(sigs: DataFrame, cfg: Config, id: Column): DataFrame =
     sigs.select(
       explode(BandKeys($"sig", cfg.bands, cfg.rows)).as("bucket"),
       id.as("id"),
       lit(0L).as("payload")
     )
 
-  /** (bucket, id, payload=simhash) rows of the SimHash chunk pass. */
-  private[graft] def simhashBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame =
+  /** (bucket, id, payload=simhash) rows of the SimHash chunk pass: every
+    * pair within Hamming distance 3 shares a 16-bit chunk (pigeonhole).
+    */
+  private[graft] def simhashBuckets(sigs: DataFrame, cfg: Config, id: Column): DataFrame =
     sigs.select(
       explode(
         array((0 until 4).map(i =>
@@ -280,32 +284,60 @@ object Dedup {
     )
 
   /** (bucket, id, payload) rows of the winnowing-anchor substring pass. */
-  private[graft] def anchorBuckets(sigs: DataFrame, cfg: Config, id: Column = col("uid")): DataFrame =
+  private[graft] def anchorBuckets(sigs: DataFrame, cfg: Config, id: Column): DataFrame =
     sigs.select(
       explode($"anchors").as("bucket"),
       id.as("id"),
       lit(0L).as("payload")
     )
 
-  /** In-stream pair gate for the SimHash pass. */
+  /** The bucket passes `cfg` enables, under their store names. Only SimHash
+    * rows carry a non-zero payload.
+    */
+  private[graft] def bucketPasses(sigs: DataFrame, cfg: Config, id: Column = col("uid")): Seq[(String, DataFrame)] =
+    Seq("lsh" -> lshBuckets(sigs, cfg, id)) ++
+      (if (cfg.simhashEnabled) Seq("sim" -> simhashBuckets(sigs, cfg, id)) else Nil) ++
+      (if (cfg.substringEnabled) Seq("sub" -> anchorBuckets(sigs, cfg, id)) else Nil)
+
+  /** The SimHash gate: a pair passes iff its payloads differ in at most
+    * `simhashMaxHamming` bits, so payload-0 rows always pass. The emitter
+    * applies it as a function, a join as [[simhashGateCol]].
+    */
   private[graft] def simhashGate(cfg: Config): (Long, Long) => Boolean = {
     val maxD = cfg.simhashMaxHamming
     (a, b) => java.lang.Long.bitCount(a ^ b) <= maxD
   }
 
-  /** MinHash LSH banding: band hash -> bucket, then streamed pair emission.
-    * Emits (id1, id2) `uid` pairs, a pair once per bucket the two share;
-    * [[convIdPairs]] maps them to `conv_id`s.
-    */
-  def lshCandidates(sigs: DataFrame, cfg: Config, metrics: Option[SkewMetrics] = None): DataFrame =
-    bucketPairs(lshBuckets(sigs, cfg), cfg.bucketCap, metrics = metrics)
+  private[graft] def simhashGateCol(cfg: Config)(a: Column, b: Column): Column =
+    bit_count(a.bitwiseXOR(b)) <= cfg.simhashMaxHamming
 
-  /** SimHash Hamming-ball candidates: 4x16-bit chunk banding guarantees every
-    * pair within Hamming distance 3 shares at least one exact chunk
-    * (pigeonhole); the in-stream Hamming gate bounds the final distance.
+  /** The hash-thinning cap: a `key` with more than `cap` member rows keeps
+    * a member iff `pmod(salt, members) < cap` — a deterministic
+    * Bernoulli(cap/members) thinning, no sort and no per-key window (which
+    * would serialize the hot key onto one task); the count aggregate
+    * combines map-side. `broadcastHot` broadcasts the oversized-key set:
+    * only where that set is known small.
     */
-  def simhashCandidates(sigs: DataFrame, cfg: Config, metrics: Option[SkewMetrics] = None): DataFrame =
-    bucketPairs(simhashBuckets(sigs, cfg), cfg.bucketCap, simhashGate(cfg), metrics)
+  private[graft] def thinHotKeys(
+      rows: DataFrame, key: Seq[String], salt: Column, cap: Int, broadcastHot: Boolean): DataFrame = {
+    val hot = hotKeys(rows, key, cap)
+    rows
+      .join(if (broadcastHot) broadcast(hot) else hot, key, "left_outer")
+      .where(col("bsz").isNull || pmod(salt, col("bsz")) < cap)
+      .select(rows.columns.map(col): _*)
+  }
+
+  /** The two counters of [[thinHotKeys]] over the same `rows`: (oversized
+    * keys, members thinned in expectation). One aggregate job.
+    */
+  private[graft] def thinCounts(rows: DataFrame, key: Seq[String], cap: Int): (Long, Long) = {
+    val r = hotKeys(rows, key, cap).agg(count(lit(1)), coalesce(sum(col("bsz") - cap), lit(0L))).first()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** (key..., bsz) for each key with more than `cap` members. */
+  private def hotKeys(rows: DataFrame, key: Seq[String], cap: Int): DataFrame =
+    rows.groupBy(key.map(col): _*).agg(count(lit(1)).as("bsz")).where(col("bsz") > cap)
 
   /** ALL enabled candidate passes in ONE shuffle: the three bucket frames
     * (disjoint 64-bit key spaces) union before the single hash-partition +
@@ -315,24 +347,17 @@ object Dedup {
     * scheduling + codegen floor — measurable at any scale, dominant at
     * bench scale). Pair semantics are identical to the three separate
     * passes: buckets never merge across passes, so chunking/caps behave the
-    * same, and the SimHash Hamming gate applies only where payloads are
-    * non-zero (LSH/anchor rows carry payload 0; a genuine simhash of 0 — an
-    * empty doc — passes the gate and is caught by exact verification like
-    * any other candidate).
+    * same, and the SimHash gate passes every pair of payload-0 LSH/anchor
+    * rows (a genuine simhash of 0 — an empty doc — passes the gate and is
+    * caught by exact verification like any other candidate).
     *
     * A pair shares a bucket in many bands and passes, so the emitter repeats
     * it dozens of times; the pairs are de-duplicated here, map-side first,
     * on the two `uid`s. Output: distinct (id1, id2) `uid` pairs, id1 < id2.
     */
-  def candidates(sigs: DataFrame, cfg: Config, metrics: Option[SkewMetrics] = None): DataFrame = {
-    var entries = lshBuckets(sigs, cfg)
-    if (cfg.simhashEnabled) entries = entries.union(simhashBuckets(sigs, cfg))
-    if (cfg.substringEnabled) entries = entries.union(anchorBuckets(sigs, cfg))
-    val maxD = cfg.simhashMaxHamming
-    val gate: (Long, Long) => Boolean =
-      (a, b) => (a == 0L && b == 0L) || java.lang.Long.bitCount(a ^ b) <= maxD
-    bucketPairs(entries, cfg.bucketCap, gate, metrics).distinct()
-  }
+  def candidates(sigs: DataFrame, cfg: Config, metrics: Option[SkewMetrics] = None): DataFrame =
+    bucketPairs(bucketPasses(sigs, cfg).map(_._2).reduce(_ union _), cfg.bucketCap, simhashGate(cfg), metrics)
+      .distinct()
 
   /** (id1, id2) `uid` pairs mapped to (id1, id2) `conv_id` pairs through the
     * (uid, conv_id) columns of `sigs`.

@@ -185,10 +185,6 @@ object ConnectedComponents {
       .agg(min($"component").as("component"))
   }
 
-  /** Driver-side union-find with path halving; representative = min node id
-    * of each set (matching the distributed loop's labeling exactly,
-    * independent of edge order).
-    */
   /** Serializes the context-global `setCheckpointDir` + eager checkpoint
     * pair across concurrent [[run]]s in one JVM (see the pin() note).
     */
@@ -215,6 +211,10 @@ object ConnectedComponents {
       }
   }
 
+  /** Driver-side union-find with path halving; representative = min node id
+    * of each set (matching the distributed loop's labeling exactly,
+    * independent of edge order).
+    */
   private def localUnionFind(spark: SparkSession, edges: Array[(String, String)]): DataFrame = {
     import spark.implicits._
     // self-loops are dropped exactly like the distributed canon() — a node

@@ -276,27 +276,14 @@ object IncrementalDedup {
     if (fs.exists(d)) fs.listStatus(d).foreach(st => fs.delete(st.getPath, false))
   }
 
-  /** All bucket entries of a signature frame, tagged by pass. The store is
-    * keyed by `conv_id`: a batch's `uid`s mean nothing to the next batch.
+  /** All bucket entries of a signature frame, tagged by pass, plus their
+    * store shard (hash of the full bucket key). The store is keyed by
+    * `conv_id`: a batch's `uid`s mean nothing to the next batch.
     */
-  private def bucketEntries(sigs: DataFrame, cfg: Dedup.Config): DataFrame = {
-    val id = $"conv_id"
-    val l = Dedup.lshBuckets(sigs, cfg, id).select(lit("lsh").as("pass"), $"bucket", $"id", $"payload")
-    val s =
-      if (cfg.simhashEnabled)
-        Dedup.simhashBuckets(sigs, cfg, id).select(lit("sim").as("pass"), $"bucket", $"id", $"payload")
-      else l.limit(0)
-    val a =
-      if (cfg.substringEnabled)
-        Dedup.anchorBuckets(sigs, cfg, id).select(lit("sub").as("pass"), $"bucket", $"id", $"payload")
-      else l.limit(0)
-    l.unionByName(s).unionByName(a)
-  }
-
-  /** Bucket entries plus their store shard (hash of the full bucket key). */
-  private[graft] def bucketEntriesWithShard(
-      sigs: DataFrame, cfg: Dedup.Config, nShards: Int): DataFrame =
-    bucketEntries(sigs, cfg)
+  private[graft] def bucketEntriesWithShard(sigs: DataFrame, cfg: Dedup.Config, nShards: Int): DataFrame =
+    Dedup.bucketPasses(sigs, cfg, $"conv_id")
+      .map { case (pass, b) => b.select(lit(pass).as("pass"), $"bucket", $"id", $"payload") }
+      .reduce(_ unionByName _)
       .withColumn("shard", pmod(xxhash64($"pass", $"bucket"), lit(nShards)))
 
   /** Process one micro-batch of transcript rows. Returns (newConvs, newPairs).
@@ -363,9 +350,8 @@ object IncrementalDedup {
     // old side of oversized buckets hash-thinned to bucketCap
     val newB = bucketEntriesWithShard(newSigs, cfg, stores.bucketShards).cache()
     val nNewB = newB.count() // materializes the cache; also the broadcast-size bound
-    val haveOld = storeExists(spark, stores.bucketStore)
     var oldCache: Option[DataFrame] = None
-    if (haveOld) {
+    if (storeExists(spark, stores.bucketStore)) {
       // two-level narrowing: the store READ is pruned to the shard
       // directories the batch's bucket keys hash into (scan IO), then
       // SEMI-JOINED down to the exact bucket keys so the hot-bucket size
@@ -380,42 +366,31 @@ object IncrementalDedup {
       // forced broadcast of those would OOM the driver or trip the 8 GB
       // broadcast hard limit — at that size the shuffled semi-join is the
       // right plan and AQE keeps the option to demote it back
-      val bucketKeys =
-        if (nNewB <= BroadcastKeyCap) broadcast(batchBuckets) else batchBuckets
-      val old0 = prunedRead(spark, stores.bucketStore, "shard", batchShards, stores.bucketShards)
+      val smallKeys = nNewB <= BroadcastKeyCap
+      val bucketKeys = if (smallKeys) broadcast(batchBuckets) else batchBuckets
+      // cached: the thinning reads it twice (hot-key count + join), the
+      // counters a third time, and the pruned store scan runs once per batch.
+      // NOT Dataset.observe for the counters: a CollectMetrics readback
+      // deadlocks inside foreachBatch — the listener only fires for
+      // top-level executions, and a micro-batch's nested actions never are.
+      val key = Seq("pass", "bucket")
+      val old = prunedRead(spark, stores.bucketStore, "shard", batchShards, stores.bucketShards)
         .drop("shard")
-        .join(bucketKeys, Seq("pass", "bucket"), "left_semi")
-      // "no silent caps" for the old side: with metrics on, the narrowed
-      // read is cached and ONE extra aggregate reports oversized buckets
-      // and the members the cap drops in expectation (pmod thinning keeps
-      // cap of bsz uniformly — same expectation semantics as Ann.capStats).
-      // NOT Dataset.observe: a CollectMetrics readback deadlocks inside
-      // foreachBatch — the listener only fires for top-level executions,
-      // and a micro-batch's nested actions never are.
-      val old = if (skew.isDefined) old0.cache() else old0
-      oldCache = if (skew.isDefined) Some(old) else None
+        .join(bucketKeys, key, "left_semi")
+        .cache()
+      oldCache = Some(old)
       for (sk <- skew) {
-        val st = old.groupBy($"pass", $"bucket").agg(count(lit(1)).as("bsz"))
-          .where($"bsz" > cfg.bucketCap)
-          .agg(count(lit(1)), coalesce(sum($"bsz" - cfg.bucketCap), lit(0L)))
-          .first()
-        sk.oldOversizedBuckets.add(st.getLong(0))
-        sk.oldThinnedMembers.add(st.getLong(1))
+        val (oversized, thinned) = Dedup.thinCounts(old, key, cfg.bucketCap)
+        sk.oldOversizedBuckets.add(oversized)
+        sk.oldThinnedMembers.add(thinned)
       }
-      // hot-bucket thinning via a WINDOW count over the already-narrowed
-      // rows: a self-join against a groupBy aggregate would scan the store a
-      // second time — the window is one tiny keyed shuffle of matching rows
-      val oldCapped = old
-        .withColumn("bsz",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy($"pass", $"bucket")))
-        .where($"bsz" <= cfg.bucketCap || pmod(xxhash64($"id", $"bucket"), $"bsz") < cfg.bucketCap)
-        .drop("bsz")
-      val maxD = cfg.simhashMaxHamming
+      // the hot keys are a subset of the batch's bucket keys, so they
+      // broadcast under the same size guard
+      val oldCapped = Dedup.thinHotKeys(old, key, xxhash64($"id", $"bucket"), cfg.bucketCap, smallKeys)
       val joined = newB.select($"pass", $"bucket", $"id".as("nid"), $"payload".as("np"))
-        .join(oldCapped.select($"pass", $"bucket", $"id".as("oid"), $"payload".as("op")),
-          Seq("pass", "bucket"))
+        .join(oldCapped.select($"pass", $"bucket", $"id".as("oid"), $"payload".as("op")), key)
         .where($"nid" =!= $"oid")
-        .where($"pass" =!= "sim" || bit_count($"np".bitwiseXOR($"op")) <= maxD)
+        .where(Dedup.simhashGateCol(cfg)($"np", $"op"))
         .select(least($"nid", $"oid").as("id1"), greatest($"nid", $"oid").as("id2"))
       cands = cands.union(joined)
     }
@@ -552,14 +527,7 @@ object IncrementalDedup {
     * singleton component (an unguarded read of a never-created store path
     * throws, and an always-on ingest loop legitimately reaches both states).
     */
-  def clusterNow(spark: SparkSession, stores: Stores): DataFrame = {
-    if (!storeExists(spark, stores.sigStore))
-      return spark.createDataFrame(Seq.empty[(String, String)]).toDF("conv_id", "component")
-    val nodes = spark.read.parquet(stores.sigStore).select($"conv_id")
-    if (!storeExists(spark, stores.pairStore))
-      return nodes.select($"conv_id", $"conv_id".as("component"))
-    Dedup.cluster(spark, nodes, spark.read.parquet(stores.pairStore))
-  }
+  def clusterNow(spark: SparkSession, stores: Stores): DataFrame = storeLabels(spark, stores, identity)._1
 
   /** Incremental clustering refresh. The previous labeling is folded in as
     * STAR EDGES (conv_id -> its component label): a component label is the
@@ -576,28 +544,34 @@ object IncrementalDedup {
       stores: Stores,
       prev: Option[(DataFrame, Long)] = None
   ): (DataFrame, Long) = {
-    if (!storeExists(spark, stores.sigStore))
-      return (
-        spark.createDataFrame(Seq.empty[(String, String)]).toDF("conv_id", "component"),
-        Long.MinValue)
-    val nodes = spark.read.parquet(stores.sigStore).select($"conv_id")
-    if (!storeExists(spark, stores.pairStore))
-      return (nodes.select($"conv_id", $"conv_id".as("component")), Long.MinValue)
-    val pairs = spark.read.parquet(stores.pairStore)
-    val upTo = pairs.agg(max($"ingest_seq")).first() match {
-      case r if r.isNullAt(0) => Long.MinValue
-      case r                  => r.getLong(0)
-    }
-    val labels = prev match {
-      case None => Dedup.cluster(spark, nodes, pairs)
+    val (labels, pairs) = storeLabels(spark, stores, all => prev match {
+      case None => all
       case Some((prevLabels, seen)) =>
-        val newPairs = pairs.where($"ingest_seq" > seen).select($"id1", $"id2")
         val stars = prevLabels.where($"conv_id" =!= $"component")
           .select($"conv_id".as("id1"), $"component".as("id2"))
-        Dedup.cluster(spark, nodes, newPairs.unionByName(stars))
-    }
-    (labels, upTo)
+        all.where($"ingest_seq" > seen).select($"id1", $"id2").unionByName(stars)
+    })
+    // the same read of the pair store, so the same file listing, as the labels
+    val upTo = pairs.map(_.agg(max($"ingest_seq")).first()).filter(!_.isNullAt(0))
+    (labels, upTo.fold(Long.MinValue)(_.getLong(0)))
   }
+
+  /** The labeling over the stores' current state, plus the pair store read
+    * it clustered, if any: empty before any ingest, singletons before the
+    * first pair, else connected components over `edges(pair store)`.
+    */
+  private def storeLabels(
+      spark: SparkSession, stores: Stores, edges: DataFrame => DataFrame): (DataFrame, Option[DataFrame]) =
+    if (!storeExists(spark, stores.sigStore))
+      (spark.createDataFrame(Seq.empty[(String, String)]).toDF("conv_id", "component"), None)
+    else {
+      val nodes = spark.read.parquet(stores.sigStore).select($"conv_id")
+      if (!storeExists(spark, stores.pairStore)) (nodes.select($"conv_id", $"conv_id".as("component")), None)
+      else {
+        val pairs = spark.read.parquet(stores.pairStore)
+        (Dedup.cluster(spark, nodes, edges(pairs)), Some(pairs))
+      }
+    }
 
   /** Rewrite one store with bounded file counts: append-mode micro-batches
     * leave one file per (batch x shard); compaction folds them to one file

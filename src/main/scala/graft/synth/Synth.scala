@@ -2,7 +2,7 @@ package graft.synth
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** One transcript turn — exactly the BASELINE.json input_hint schema. */
 case class Turn(conv_id: String, turn_idx: Int, role: String, text: String, tool: String, ts: Timestamp)
@@ -135,7 +135,4 @@ object Synth {
         (0 until size).map(m => TruthRow(s"c${cluster}_$m", cluster, variant))
       }
   }
-
-  /** Count of turns without materializing (for throughput metrics). */
-  def turnCount(transcripts: DataFrame): Long = transcripts.count()
 }

@@ -23,6 +23,14 @@ class DedupPipelineSpec extends AnyFunSuite {
   lazy val result = Dedup.run(spark, transcripts, cfg)
   lazy val clusters = result.clusters.cache()
 
+  test("a negative SimHash Hamming bound is refused") {
+    // the one SimHash gate passes the payload-0 LSH/anchor rows only under
+    // a bound >= 0
+    val e = intercept[IllegalArgumentException](Dedup.Config(simhashMaxHamming = -1))
+    assert(e.getMessage.contains("simhashMaxHamming"))
+    assert(Dedup.Config(simhashMaxHamming = 0).simhashMaxHamming == 0)
+  }
+
   test("synthetic corpus is deterministic and non-trivial") {
     val n = transcripts.count()
     assert(n > 1000, s"expected >1000 turns, got $n")

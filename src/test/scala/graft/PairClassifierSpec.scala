@@ -26,7 +26,7 @@ class PairClassifierSpec extends AnyFunSuite {
     // candidates WITHOUT the exact-verify gate: classifier replaces the gate.
     // Use a loosened config so both positives and negatives flow through.
     val loose = cfg.copy(simhashEnabled = false, substringEnabled = false)
-    val lsh = Dedup.convIdPairs(Dedup.lshCandidates(sigs, loose), sigs).distinct()
+    val lsh = Dedup.convIdPairs(Dedup.candidates(sigs, loose), sigs)
     // LSH candidates are nearly all true dups; add hash-shuffled adjacent
     // pairs as background negatives (classifier.py trains on all block pairs,
     // which are overwhelmingly negative)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -905,5 +906,40 @@ class StreamingSpec extends AnyFunSuite {
     val post = spark.read.parquet(stores.bucketStore)
     assert(post.groupBy($"pass", $"bucket", $"id").count().where($"count" > 1).count() == 0,
       "orphans of the crashed first batch must not duplicate on replay")
+  }
+
+  test("old-side hot-bucket thinning keeps the window formulation's members and counts them") {
+    import spark.implicits._
+    // one LSH band over 4 permutations and no other pass: identical docs
+    // share exactly one (pass, bucket)
+    val cfg = Dedup.Config(numPerms = 4, bands = 1, bucketCap = 8,
+      simhashEnabled = false, substringEnabled = false)
+    val tmp = Files.createTempDirectory("graft-oldcap").toString
+    val stores = IncrementalDedup.Stores(s"$tmp/sigs", s"$tmp/pairs")
+    val text = "the same canned assistant reply repeated verbatim across many conversations of this store"
+    def turns(ids: Seq[String]) = ids.map(c => (c, 0, text)).toDF("conv_id", "turn_idx", "text")
+    val old = (0 until 40).map(i => f"old$i%02d")
+    IncrementalDedup.processBatch(spark, turns(old), stores, cfg, batchSeq = 0L)
+    val hot = spark.read.parquet(stores.bucketStore)
+    assert(hot.select($"pass", $"bucket").distinct().count() == 1 && hot.count() == old.size)
+    // the window formulation the old side was first written with: count the
+    // members of each (pass, bucket) over the narrowed store rows, keep a
+    // member of an oversized bucket iff pmod(xxhash64(id, bucket), bsz) < cap
+    val expectKept = hot
+      .withColumn("bsz", count(lit(1)).over(Window.partitionBy($"pass", $"bucket")))
+      .where($"bsz" <= cfg.bucketCap || pmod(xxhash64($"id", $"bucket"), $"bsz") < cfg.bucketCap)
+      .select($"id").as[String].collect().toSet
+    assert(expectKept.nonEmpty && expectKept.size < old.size, s"thinning must bite: $expectKept")
+
+    val sk = IncrementalDedup.batchSkew(spark)
+    IncrementalDedup.processBatch(spark, turns(Seq("new")), stores, cfg, batchSeq = 1L, skew = Some(sk))
+    // the new doc equals every old one, so each kept old member verifies
+    // as a pair with it and each thinned one yields none
+    val paired = spark.read.parquet(stores.pairStore).where($"ingest_seq" === 1L)
+      .select(when($"id1" === "new", $"id2").otherwise($"id1")).as[String].collect().toSet
+    assert(paired == expectKept)
+    assert(sk.oldOversizedBuckets.value == 1L)
+    assert(sk.oldThinnedMembers.value == (old.size - cfg.bucketCap).toLong)
+    assert(sk.newNew.oversizedBuckets.value == 0L && sk.newNew.droppedPairs.value == 0L)
   }
 }
