@@ -758,11 +758,12 @@ object SparkEntry {
     "a04_ann_ivf" -> ((s, d) => {
       val emb = embFrame(s, d)
       val queries = emb.where($"id".cast("long") % 50 === 0)
-      // identical to Ann.ivfTopK(..., nCells = 16, nProbe = 4) — the trained
-      // quantizer is memoized across a04/a06/a07 (see ivfCentroids)
+      // the in-memory handle IvfIndex.build(emb, nCells = 16) constructs —
+      // the trained quantizer is memoized across a04/a06/a07 (see
+      // ivfCentroids)
       val centroids = ivfCentroids(s, d)
-      graft.ops.Ann.probeIvf(queries, centroids,
-        graft.ops.Ann.buildLists(emb, centroids), k = 3, nProbe = 4)
+      graft.ops.IvfIndex.topK(queries,
+        graft.ops.IvfIndex.Handle(centroids, graft.ops.IvfIndex.buildLists(emb, centroids)), k = 3, nProbe = 4)
     }),
 
     // ---- persisted IVF index (S10 model-sink shape for ANN): build -> save
@@ -783,7 +784,7 @@ object SparkEntry {
       // quantizer shared across a04/a06/a07 (see ivfCentroids)
       val centroids = ivfCentroids(s, d)
       graft.ops.IvfIndex.save(s,
-        graft.ops.IvfIndex.Handle(centroids, graft.ops.Ann.buildLists(emb, centroids)), idxPath)
+        graft.ops.IvfIndex.Handle(centroids, graft.ops.IvfIndex.buildLists(emb, centroids)), idxPath)
       graft.ops.IvfIndex.topK(queries, graft.ops.IvfIndex.load(s, idxPath), k = 3, nProbe = 4)
     }),
 
@@ -802,7 +803,7 @@ object SparkEntry {
       val half1 = emb.where(pmod(xxhash64($"id"), lit(2)) === 0)
       val half2 = emb.where(pmod(xxhash64($"id"), lit(2)) === 1)
       graft.ops.IvfIndex.save(s,
-        graft.ops.IvfIndex.Handle(centroids, graft.ops.Ann.buildLists(half1, centroids)), idxPath)
+        graft.ops.IvfIndex.Handle(centroids, graft.ops.IvfIndex.buildLists(half1, centroids)), idxPath)
       graft.ops.IvfIndex.add(s, idxPath, half2)
       graft.ops.IvfIndex.topK(queries, graft.ops.IvfIndex.load(s, idxPath), k = 3, nProbe = 4)
     }),
@@ -909,11 +910,11 @@ object SparkEntry {
     t(s, d, "embeddings").select(col("vec_id").cast("string").as("id"), col("embedding").as("vec"))
 
   /** The shared IVF quantizer for a04/a06/a07 (deterministic integer-milli
-    * Lloyd — ops/Ann.trainCentroids — so sharing changes no answer).
+    * Lloyd — IvfIndex.trainCentroids — so sharing changes no answer).
     */
   private def ivfCentroids(s: SparkSession, d: String): Array[Array[Double]] =
     memoDerived(s, d, "ivf-centroids-c16") {
-      graft.ops.Ann.trainCentroids(embFrame(s, d), nCells = 16)
+      graft.ops.IvfIndex.trainCentroids(embFrame(s, d), nCells = 16)
     }
 
   /** The trained-embedding frame behind a05: factored out so MakeGolden can

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -11,17 +12,16 @@ import org.apache.spark.unsafe.types.UTF8String
 object ContentAnchorsImpl {
   private final val B = 1000003L // polynomial rolling-hash base
 
-  /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03): rolling
-    * hashes of every `width`-char window, then the minimum hash of every
-    * `stride` consecutive windows (monotone deque, O(n) total). Guarantee:
-    * two strings sharing any substring of length >= width + stride - 1 share
-    * at least one selected fingerprint — anchor positions are content-defined,
-    * so alignment never depends on document offsets.
+  /** The winnowing pass both kernels share (Schleimer/Wilkerson/Aiken,
+    * SIGMOD'03): rolling hashes `hs` of every `width`-char window (UTF-16
+    * chars), then the window holding the minimum hash of every `stride`
+    * consecutive windows (monotone deque, O(n) total, rightmost-min tie
+    * rule; with at most `stride` windows, the first minimum). Returns `hs`
+    * and the selected window indices `sel(0 until selN)`, ascending and
+    * distinct. Requires `str.length >= width`.
     */
-  def anchors(s: UTF8String, width: Int, stride: Int): GenericArrayData = {
-    val str = s.toString
+  private def winnow(str: String, width: Int, stride: Int): (Array[Long], Array[Int], Int) = {
     val n = str.length
-    if (n < width) return new GenericArrayData(Array.empty[Long])
     val m = n - width + 1 // number of windows
     val hs = new Array[Long](m)
     // precompute B^(width-1) for the rolling update
@@ -39,13 +39,12 @@ object ContentAnchorsImpl {
       i += 1
     }
     if (m <= stride) {
-      var mn = hs(0); i = 1
-      while (i < m) { if (hs(i) < mn) mn = hs(i); i += 1 }
-      return new GenericArrayData(Array(mix(mn)))
+      var mn = 0
+      i = 1
+      while (i < m) { if (hs(i) < hs(mn)) mn = i; i += 1 }
+      return (hs, Array(mn), 1)
     }
-    // sliding-window minimum over hs with window `stride` (monotone deque of
-    // indices, increasing hash values; rightmost-min tie rule)
-    val sel = new Array[Long](m - stride + 1)
+    val sel = new Array[Int](m - stride + 1)
     var selN = 0
     val deque = new Array[Int](m)
     var head = 0; var tail = 0 // [head, tail)
@@ -54,22 +53,36 @@ object ContentAnchorsImpl {
       while (tail > head && hs(deque(tail - 1)) >= hs(i)) tail -= 1
       deque(tail) = i; tail += 1
       while (deque(head) <= i - stride) head += 1
-      if (i >= stride - 1) {
-        val v = mix(hs(deque(head)))
-        // consecutive windows usually share their min; cheap run-length skip
-        if (selN == 0 || sel(selN - 1) != v) { sel(selN) = v; selN += 1 }
+      // consecutive windows usually share their min: record it once
+      if (i >= stride - 1 && (selN == 0 || sel(selN - 1) != deque(head))) {
+        sel(selN) = deque(head); selN += 1
       }
       i += 1
     }
-    val trimmed = java.util.Arrays.copyOf(sel, selN)
-    java.util.Arrays.sort(trimmed)
+    (hs, sel, selN)
+  }
+
+  /** Winnowing fingerprints: the sorted distinct mixed hashes of the
+    * selected windows. Guarantee: two strings sharing any substring of
+    * length >= width + stride - 1 share at least one selected fingerprint —
+    * anchor positions are content-defined, so alignment never depends on
+    * document offsets.
+    */
+  def anchors(s: UTF8String, width: Int, stride: Int): GenericArrayData = {
+    val str = s.toString
+    if (str.length < width) return new GenericArrayData(Array.empty[Long])
+    val (hs, sel, selN) = winnow(str, width, stride)
+    val out = new Array[Long](selN)
+    var i = 0
+    while (i < selN) { out(i) = mix(hs(sel(i))); i += 1 }
+    java.util.Arrays.sort(out)
     var w = 0
     i = 0
     while (i < selN) {
-      if (w == 0 || trimmed(i) != trimmed(w - 1)) { trimmed(w) = trimmed(i); w += 1 }
+      if (w == 0 || out(i) != out(w - 1)) { out(w) = out(i); w += 1 }
       i += 1
     }
-    new GenericArrayData(java.util.Arrays.copyOf(trimmed, w))
+    new GenericArrayData(java.util.Arrays.copyOf(out, w))
   }
 
   /** finalize raw polynomial hashes so adversarial/low-entropy windows spread */
@@ -93,52 +106,17 @@ object ContentAnchorsImpl {
     val str = s.toString
     val n = str.length
     if (n < width) return new GenericArrayData(Array.empty[Any])
-    val m = n - width + 1
-    val hs = new Array[Long](m)
-    var pow = 1L
+    val (hs, sel, selN) = winnow(str, width, stride)
+    // stable sort of ascending offsets: (anchor, window offset) order
+    val sorted = sel.take(selN).sortBy(p => mix(hs(p)))
+    val out = new Array[Any](selN)
     var i = 0
-    while (i < width - 1) { pow *= B; i += 1 }
-    var h = 0L
-    i = 0
-    while (i < width) { h = h * B + str.charAt(i); i += 1 }
-    hs(0) = h
-    i = 1
-    while (i < m) {
-      h = (h - str.charAt(i - 1) * pow) * B + str.charAt(i + width - 1)
-      hs(i) = h
-      i += 1
-    }
-    val sel = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-    if (m <= stride) {
-      var mnIdx = 0
-      i = 1
-      while (i < m) { if (hs(i) < hs(mnIdx)) mnIdx = i; i += 1 }
-      sel += ((mix(hs(mnIdx)), mnIdx))
-    } else {
-      val deque = new Array[Int](m)
-      var head = 0; var tail = 0
-      var lastIdx = -1
-      i = 0
-      while (i < m) {
-        while (tail > head && hs(deque(tail - 1)) >= hs(i)) tail -= 1
-        deque(tail) = i; tail += 1
-        while (deque(head) <= i - stride) head += 1
-        if (i >= stride - 1 && deque(head) != lastIdx) {
-          lastIdx = deque(head)
-          sel += ((mix(hs(lastIdx)), lastIdx))
-        }
-        i += 1
-      }
-    }
-    val sorted = sel.sortBy(identity)
-    val out = new Array[Any](sorted.length)
-    i = 0
-    while (i < sorted.length) {
-      val (a, p) = sorted(i)
+    while (i < selN) {
+      val p = sorted(i)
       val start = math.max(0, p - maxExtend)
       val end = math.min(n, p + width + maxExtend)
       out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](a, p - start, UTF8String.fromString(str.substring(start, end))))
+        Array[Any](mix(hs(p)), p - start, UTF8String.fromString(str.substring(start, end))))
       i += 1
     }
     new GenericArrayData(out)
@@ -152,6 +130,9 @@ object ContentAnchorsImpl {
   */
 case class ContentAnchors(child: Expression, width: Int, stride: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    SigKernelsImpl.requireInputs("content_anchors", Seq(child.dataType), Seq(StringType))
 
   override def nullSafeEval(input: Any): Any =
     ContentAnchorsImpl.anchors(input.asInstanceOf[UTF8String], width, stride)
@@ -186,6 +167,9 @@ case class AnchorContexts(child: Expression, width: Int, stride: Int, maxExtend:
       StructField("off", IntegerType, nullable = false),
       StructField("ctx", StringType, nullable = false))),
     containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    SigKernelsImpl.requireInputs("anchor_contexts", Seq(child.dataType), Seq(StringType))
 
   override def nullSafeEval(input: Any): Any =
     ContentAnchorsImpl.anchorContexts(input.asInstanceOf[UTF8String], width, stride, maxExtend)

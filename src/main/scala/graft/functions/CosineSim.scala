@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -74,7 +75,7 @@ object CosineSimImpl {
   * `aggregate(zip_with(a, b, _*_), 0.0, _+_)` / self-dot HOF composition in
   * Ann.cosine: higher-order functions evaluate their lambda interpreted per
   * ELEMENT and fall off whole-stage codegen, which made the brute-force
-  * cosine top-k paths (a05, bruteForceTopK, probeIvf's scoring) pay ~6 s per
+  * cosine top-k paths (a05, bruteForceTopK, IvfIndex.topK's scoring) pay ~6 s per
   * million pairs at dim 16. Semantics, including the zero-norm -> 0.0
   * definition (ANSI DIVIDE_BY_ZERO guard) and IEEE left-fold summation
   * order, are bit-identical to the HOF composition — pinned by FunctionsSpec
@@ -86,24 +87,16 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  /** The element types the kernel reads; anything else fails analysis. */
-  private def elemType(t: DataType): Option[Int] = t match {
-    case ArrayType(IntegerType, _) => Some(CosineSimImpl.ElemInt)
-    case ArrayType(LongType, _)    => Some(CosineSimImpl.ElemLong)
-    case ArrayType(FloatType, _)   => Some(CosineSimImpl.ElemFloat)
-    case ArrayType(DoubleType, _)  => Some(CosineSimImpl.ElemDouble)
-    case _                         => None
+  override def checkInputDataTypes(): TypeCheckResult =
+    SigKernelsImpl.requireInputs("cosine_sim", Seq(left.dataType, right.dataType), SigKernelsImpl.NumericArrays)
+
+  /** The kernel's element code; analysis admits no other element type. */
+  private def elemTypeOf(e: Expression): Int = e.dataType match {
+    case ArrayType(IntegerType, _) => CosineSimImpl.ElemInt
+    case ArrayType(LongType, _)    => CosineSimImpl.ElemLong
+    case ArrayType(FloatType, _)   => CosineSimImpl.ElemFloat
+    case ArrayType(DoubleType, _)  => CosineSimImpl.ElemDouble
   }
-
-  private def elemTypeOf(e: Expression): Int = elemType(e.dataType).get
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (elemType(left.dataType).isDefined && elemType(right.dataType).isDefined)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "cosine_sim expects two arrays of int, bigint, float or double, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
 
   override def nullSafeEval(a: Any, b: Any): Any =
     CosineSimImpl.cos(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -72,7 +73,7 @@ object MinHashImpl {
   }
 }
 
-/** `minhash_signature(array<long>) -> array<int>` — batched 128-permutation
+/** `minhash_signature(array<int|bigint>) -> array<int>` — batched 128-permutation
   * MinHash as a native Catalyst expression with codegen (reference analogue:
   * the per-pair doc2vec/token-bag similarity features, c_org.py:18-28 and
   * doc2vec.py:44-49, replaced by signatures per SURVEY.md §7).
@@ -83,6 +84,9 @@ case class MinHashSignature(child: Expression, numPerms: Int, seed: Long)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   @transient private lazy val cs: Array[Long] = MinHashImpl.coeffs(numPerms, seed)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    SigKernelsImpl.requireInputs("minhash_signature", Seq(child.dataType), SigKernelsImpl.HashArrays)
 
   private def intElems: Boolean = child.dataType match {
     case ArrayType(IntegerType, _) => true

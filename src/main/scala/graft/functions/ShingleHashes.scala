@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -84,12 +85,15 @@ object ShingleHashesImpl {
   }
 }
 
-/** `shingle_hashes(string, k) -> array<long>` — fused normalization +
+/** `shingle_hashes(string, k) -> array<int>` — fused normalization +
   * word-k-shingle hashing (the wordlist.py:21-34 tokenize + §7 shingling
   * analogue) as a single codegen'd Catalyst expression.
   */
 case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    SigKernelsImpl.requireInputs("shingle_hashes", Seq(child.dataType), Seq(StringType))
 
   override def nullSafeEval(input: Any): Any =
     ShingleHashesImpl.shingles(input.asInstanceOf[UTF8String], k)

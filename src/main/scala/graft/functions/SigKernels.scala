@@ -54,15 +54,31 @@ object SigKernelsImpl {
     new GenericArrayData(out)
   }
 
-  private[functions] def requireIntArrays(name: String, types: Seq[DataType]): TypeCheckResult =
-    if (types.forall {
-          case ArrayType(IntegerType, _) => true
-          case _                         => false
-        })
+  /** The analysis-time input check of the graft expressions: each argument
+    * type must be one of `accepted` (array nullability and string collation
+    * ignored) and, with `alike`, all arguments the same type. What a kernel
+    * cannot read fails analysis instead of the task that would read it.
+    */
+  private[functions] def requireInputs(
+      name: String, types: Seq[DataType], accepted: Seq[DataType], alike: Boolean = false): TypeCheckResult = {
+    def norm(t: DataType): DataType = t match {
+      case ArrayType(e, _) => ArrayType(e, containsNull = true)
+      case _: StringType   => StringType
+      case other           => other
+    }
+    val got = types.map(norm)
+    if (got.forall(accepted.map(norm).contains) && (!alike || got.distinct.size == 1))
       TypeCheckResult.TypeCheckSuccess
     else
       TypeCheckResult.TypeCheckFailure(
-        s"$name expects array<int>, got ${types.map(_.simpleString).mkString(", ")}")
+        s"$name expects ${if (alike) "arguments of one type, each " else ""}" +
+          s"${accepted.map(_.simpleString).mkString(" or ")}, got ${types.map(_.simpleString).mkString(", ")}")
+  }
+
+  final val IntArrays: Seq[DataType] = Seq(ArrayType(IntegerType))
+  final val HashArrays: Seq[DataType] = Seq(ArrayType(IntegerType), ArrayType(LongType))
+  final val NumericArrays: Seq[DataType] =
+    Seq(ArrayType(IntegerType), ArrayType(LongType), ArrayType(FloatType), ArrayType(DoubleType))
 }
 
 /** Number of positions where two MinHash signatures agree; divided by the
@@ -75,7 +91,7 @@ case class SignatureAgreement(left: Expression, right: Expression) extends Binar
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
-    SigKernelsImpl.requireIntArrays("signature agreement", Seq(left.dataType, right.dataType))
+    SigKernelsImpl.requireInputs("signature agreement", Seq(left.dataType, right.dataType), SigKernelsImpl.IntArrays)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val c = SigKernelsImpl.agreement(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -107,7 +123,7 @@ case class BandKeys(child: Expression, bands: Int, rows: Int) extends UnaryExpre
   override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult =
-    SigKernelsImpl.requireIntArrays("band keys", Seq(child.dataType))
+    SigKernelsImpl.requireInputs("band keys", Seq(child.dataType), SigKernelsImpl.IntArrays)
 
   override def eval(input: InternalRow): Any =
     SigKernelsImpl.bandKeys(child.eval(input).asInstanceOf[ArrayData], bands, rows)

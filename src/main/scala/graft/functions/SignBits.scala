@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -76,7 +77,7 @@ object SignBitsImpl {
   }
 }
 
-/** `packed_sign_bits(array<float|double>) -> long` — sign-LSH bucket/
+/** `packed_sign_bits(array<int|bigint|float|double>) -> long` — sign-LSH bucket/
   * signature as a native codegen'd Catalyst expression: one pass over the
   * vector per plane, zero allocation. Replaces a per-plane
   * `aggregate(zip_with(vec, array(lit...)))` HOF composition that fell off
@@ -96,6 +97,9 @@ case class PackedSignBits(child: Expression, dim: Int, nBits: Int, seed: Long)
   override def dataType: DataType = LongType
 
   @transient private lazy val flat: Array[Double] = SignBitsImpl.planes(dim, nBits, seed)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    SigKernelsImpl.requireInputs("packed_sign_bits", Seq(child.dataType), SigKernelsImpl.NumericArrays)
 
   private def elemType: Int = child.dataType match {
     case ArrayType(LongType, _)   => CentroidDistancesImpl.ElemLong

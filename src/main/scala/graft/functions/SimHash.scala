@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -52,12 +53,15 @@ object SimHashImpl {
   }
 }
 
-/** `simhash64(array<long>) -> long` — 64-bit SimHash fingerprint from token
+/** `simhash64(array<int|bigint>) -> long` — 64-bit SimHash fingerprint from token
   * hashes (with multiplicity). Hamming-ball retrieval pairs with 16-bit chunk
   * banding (4 chunks find all pairs at Hamming distance <= 3 by pigeonhole).
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    SigKernelsImpl.requireInputs("simhash64", Seq(child.dataType), SigKernelsImpl.HashArrays)
 
   private def intElems: Boolean = child.dataType match {
     case ArrayType(IntegerType, _) => true

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -29,9 +30,12 @@ object SortedIntersectImpl {
   }
 }
 
-/** `sorted_intersect_size(array<long>, array<long>) -> int` */
+/** `sorted_intersect_size(array<int>, array<int>)` or `(array<bigint>, array<bigint>)` -> int */
 case class SortedIntersectSize(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = IntegerType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    SigKernelsImpl.requireInputs("sorted_intersect_size", Seq(left.dataType, right.dataType), SigKernelsImpl.HashArrays, alike = true)
 
   private def intElems: Boolean = left.dataType match {
     case ArrayType(IntegerType, _) => true

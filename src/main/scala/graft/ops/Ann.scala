@@ -11,7 +11,8 @@ import graft.pipeline.Dedup
   * (`array<float>`): brute-force cosine top-k as the exact baseline, and a
   * random-hyperplane (sign-LSH) bucketed variant as the scale path — at 10^9+
   * vectors the bucketed candidate join replaces the full cross product, the
-  * same blocking idea the dedup pipeline applies to text.
+  * same blocking idea the dedup pipeline applies to text. The IVF layout
+  * (trained inverted lists) lives in [[IvfIndex]].
   */
 object Ann {
 
@@ -142,212 +143,6 @@ object Ann {
     */
   def capStats(corpus: DataFrame, dim: Int, nBits: Int, nTables: Int, seed: Long, bucketCap: Int): (Long, Long) =
     Dedup.thinCounts(signTables(corpus, dim, nBits, nTables, seed), Seq("table", "bucket"), bucketCap)
-
-  /** IVF-style ANN (IVF-Flat, the standard billion-scale layout): a coarse
-    * quantizer partitions the corpus into nCells inverted lists; each query
-    * probes its nProbe nearest centroids and brute-forces only those lists.
-    *
-    * The quantizer is a purpose-built deterministic Lloyd's k-means, NOT
-    * ml.KMeans: vectors are quantized to integer millis so every centroid is
-    * a ratio of order-independent long sums — the trained index and therefore
-    * the query results are bit-identical at ANY partitioning/parallelism
-    * (ml.KMeans' k-means|| init and double summation are partition-order
-    * sensitive). Training runs on a deterministic hash sample (`sampleCap`),
-    * the standard IVF practice; assignment and probing are pure map-side
-    * literal-centroid expressions (no join, no window), so the only shuffles
-    * in the query path are the probe join and the final top-k.
-    * Returns (query_id, neighbor_id, cos, rank).
-    */
-  def ivfTopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 3,
-      seed: Long = 42L,
-      iters: Int = 5,
-      sampleCap: Int = 100000,
-      listCap: Int = 100000
-  ): DataFrame = {
-    val centroids = trainCentroids(corpus, nCells, seed, iters, sampleCap)
-    probeIvf(queries, centroids, buildLists(corpus, centroids, listCap), k, nProbe)
-  }
-
-  /** integer-milli quantization of the `vec` column (order-independent long
-    * arithmetic downstream — the determinism backbone of the IVF path).
-    *
-    * TOTAL by construction, not by the upstream finiteVecs filter: under
-    * ANSI mode the bare cast THROWS on NaN/Inf, and Catalyst may evaluate
-    * this expression as a PREDICATE reordered relative to the guard filter
-    * (measured: runtime bloom-filter injection on the IVF cell join key
-    * evaluated the cast below the finiteVecs filter and failed the task on
-    * a row the filter excludes). NaN and any magnitude the milli-space
-    * cannot represent in a BIGINT (|x| > 9e15 — unit-norm embeddings live
-    * twelve orders of magnitude below) quantize to 0; rows that reach
-    * downstream semantics are still finiteVecs-clean.
-    */
-  private[ops] def quantExpr: Column =
-    transform(col("vec"), x => {
-      val d = x.cast("double")
-      when(isnan(d) || abs(d) > lit(9.0e15), lit(0L))
-        .otherwise(round(d * 1000).cast("long"))
-    })
-
-  /** Deterministic Lloyd quantizer over a hash sample of the corpus (see
-    * ivfTopK doc): returns the trained centroids in quantized-milli space.
-    * Bit-identical at any partitioning/parallelism.
-    */
-  def trainCentroids(
-      corpus: DataFrame,
-      nCells: Int,
-      seed: Long = 42L,
-      iters: Int = 5,
-      sampleCap: Int = 100000
-  ): Array[Array[Double]] = {
-    val quant = quantExpr
-
-    // the corpus dim is the modal WELL-FORMED vector size (one tiny
-    // map-side-combined aggregate; ties break to the smaller size,
-    // deterministically). The mode is taken over vectors that would
-    // survive finiteVecs — counting merely non-null rows would let a
-    // majority class of garbage (e.g. one bad encoder batch of all-NaN
-    // dim-64 rows) pick a size whose finiteVecs pass is then EMPTY,
-    // silently disabling the index while valid vectors of another size
-    // exist. An all-degenerate corpus trains no centroids.
-    val dimRow = corpus
-      .where(col("vec").isNotNull &&
-        !exists(col("vec"), v =>
-          v.isNull || isnan(v) || abs(v.cast("double")) > lit(Float.MaxValue.toDouble)))
-      .groupBy(size(col("vec")).as("sz")).agg(count(lit(1)).as("cnt"))
-      .where(col("sz") >= 1)
-      .orderBy(col("cnt").desc, col("sz").asc)
-      .limit(1).collect()
-    if (dimRow.isEmpty) return Array.empty
-    val wf = finiteVecs(corpus, "vec", dimRow(0).getAs[Int]("sz"))
-
-    // deterministic training sample of ~sampleCap rows
-    val n = wf.count()
-    if (n == 0) return Array.empty
-    val keepPerM = if (n <= sampleCap) 1000000L else math.max(1L, sampleCap * 1000000L / n)
-    val sample = wf
-      .where(pmod(xxhash64(col("id"), lit(seed)), lit(1000000L)) < keepPerM)
-      .select(col("id"), quant.as("qv"))
-      .cache()
-
-    // init: the nCells sample vectors with smallest hash rank
-    var centroids: Array[Array[Double]] = sample
-      .orderBy(xxhash64(col("id"), lit(seed + 1)), col("id"))
-      .limit(nCells)
-      .select(col("qv"))
-      .collect()
-      .map(_.getSeq[Long](0).map(_.toDouble).toArray)
-
-    // Lloyd iterations: per-dim LONG sums (order-independent) -> new
-    // centroids. Assignment inside the loop joins a tiny broadcast centroid
-    // table instead of baking centroids into literal expressions: the plan
-    // SHAPE stays constant across iterations, so analysis + whole-stage
-    // codegen are cached after round one (literal centroids would recompile
-    // a nCells x dim expression every iteration — measured as the dominant
-    // cost of the whole index build). Argmin = min(struct(dist, cell)):
-    // value-based, ties to the lowest cell, partition-order independent.
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    var it = 0
-    while (it < iters) {
-      val centDf = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-      val dist = aggregate(
-        zip_with(col("qv"), col("centroid"), (x, cc) => (x.cast("double") - cc) * (x.cast("double") - cc)),
-        lit(0.0),
-        (s, x) => s + x
-      )
-      val sums = sample
-        .crossJoin(broadcast(centDf))
-        .select(col("id"), col("qv"), struct(dist.as("dist"), col("cell").as("cell")).as("dc"))
-        .groupBy(col("id"))
-        .agg(min(col("dc")).as("m"), first(col("qv")).as("v")) // one qv per id: first is exact
-        .select(col("m.cell").as("cell"), posexplode(col("v")).as(Seq("d", "v")))
-        .groupBy(col("cell"), col("d"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-        .collect()
-      val next = centroids.map(_.clone())
-      sums.foreach { r =>
-        next(r.getAs[Int]("cell"))(r.getAs[Int]("d")) =
-          r.getAs[Long]("s").toDouble / r.getAs[Long]("c")
-      }
-      centroids = next // empty cells keep their previous centroid
-      it += 1
-    }
-    sample.unpersist()
-    centroids
-  }
-
-  /** native codegen'd distance row (bit-identical fold order to the HOF
-    * composition it replaces — see CentroidSqDistances)
-    */
-  private[ops] def distArray(centroids: Array[Array[Double]])(vecCol: Column): Column =
-    graft.functions.CentroidSqDistances(vecCol, centroids)
-
-  /** argmin by value: ties resolve to the FIRST (lowest) cell — value-based,
-    * so deterministic at any partitioning
-    */
-  private[ops] def assignExpr(centroids: Array[Array[Double]])(vecCol: Column): Column = {
-    val d = distArray(centroids)(vecCol)
-    (array_position(d, array_min(d)) - 1).cast("int")
-  }
-
-  /** IVF inverted lists for a trained quantizer: map-side cell assignment,
-    * hot cells bounded like lshTopK. Output (neighbor_id, nv, cell) — the
-    * frame `IvfIndex.save` persists partitioned by cell.
-    */
-  def buildLists(corpus: DataFrame, centroids: Array[Array[Double]], listCap: Int = 100000): DataFrame =
-    // degenerate rows can't be quantized against the trained space (see
-    // finiteVecs); an untrained quantizer (all-degenerate corpus) indexes
-    // nothing
-    if (centroids.isEmpty)
-      corpus.select(col("id").as("neighbor_id"), col("vec").as("nv"), lit(0).as("cell")).limit(0)
-    else
-      Dedup.thinHotKeys(
-        finiteVecs(corpus, "vec", centroids(0).length)
-          .select(col("id").as("neighbor_id"), col("vec").as("nv"), assignExpr(centroids)(quantExpr).as("cell")),
-        Seq("cell"), xxhash64(col("neighbor_id"), lit(0), col("cell")), listCap, broadcastHot = true)
-
-  /** Probe path over trained centroids + inverted lists (fresh-built or
-    * loaded from a persisted index): nProbe nearest centroids per query,
-    * map-side — keep cells whose distance is within the nProbe-th smallest
-    * (value-based: ties may probe one extra list, deterministically). nProbe
-    * is clamped to the TRAINED centroid count: a tiny corpus can yield fewer
-    * than nCells centroids and element_at past the end errors under ANSI
-    * mode (Spark 4 default).
-    */
-  def probeIvf(
-      queries: DataFrame,
-      centroids: Array[Array[Double]],
-      lists: DataFrame,
-      k: Int,
-      nProbe: Int = 3
-  ): DataFrame = {
-    if (centroids.isEmpty)
-      return queries.select(col("id").as("query_id"), col("id").as("neighbor_id"),
-        lit(0.0).as("cos"), lit(0).as("rank")).limit(0)
-    val quant = quantExpr
-    val kthIdx = math.min(nProbe, centroids.length)
-    val probes = finiteVecs(queries, "vec", centroids(0).length)
-      .select(col("id").as("query_id"), col("vec").as("qv"), distArray(centroids)(quant).as("ds"),
-        element_at(array_sort(distArray(centroids)(quant)), kthIdx).as("kth"))
-      .select(col("query_id"), col("qv"), col("kth"), posexplode(col("ds")).as(Seq("cell", "dist")))
-      .where(col("dist") <= col("kth"))
-      .select(col("query_id"), col("qv"), col("cell"))
-
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    probes
-      .join(lists, Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("nv")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
-  }
 
   /** Embedding-cosine near-duplicate pairs over one corpus, through the SAME
     * capped chunked pair generator as text dedup (Dedup.bucketPairs): sign-LSH

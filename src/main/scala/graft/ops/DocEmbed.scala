@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * MLlib has no Doc2Vec; the survey's mapping (SURVEY §2.8 M8) is
   * ml.feature.Word2Vec with doc vectors as the average of word vectors —
   * which is exactly what Word2VecModel.transform emits for a token-array
-  * column. The resulting (id, vec) frame feeds every Ann entry point
-  * (ivfTopK/lshTopK/nearDupPairs), closing the raw-text -> trained-embedding
+  * column. The resulting (id, vec) frame feeds every ANN entry point
+  * (IvfIndex, Ann.lshTopK/nearDupPairs), closing the raw-text -> trained-embedding
   * -> ANN path end-to-end.
   */
 object DocEmbed {

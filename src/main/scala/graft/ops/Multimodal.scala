@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions._
   *     dimensions, and per-frame pixel statistics come from the decoded
   *     rasters, and `sampleFrames` re-encodes every sampled frame as a
   *     standalone PNG (the batch shape a vision encoder consumes).
-  * `decodeStub` remains as the header-only metadata seam (pure built-ins,
-  * no row-level JVM code) for callers that must not touch payload bodies —
-  * and as the drop-in spot for a JNI ffmpeg when richer codecs are needed.
   */
 object Multimodal {
 
@@ -284,34 +281,6 @@ object Multimodal {
       }
       (a, d)
     }.select($"_1.*", $"_2".as("decoded"))
-  }
-
-  /** STUB DECODE — header-only parse with pure built-ins, kept for callers
-    * that only need container metadata without touching sample/pixel data
-    * (and as the drop-in seam for a richer JNI codec). Parses the real
-    * container headers the corpus carries: RIFF/WAVE audio (window count =
-    * data-chunk bytes / (2 * AudioWindow) for canonical 44-byte-header PCM)
-    * and GIF video (logical-screen dimensions; the frame count is not in
-    * the header, so dec_frames = -1 — full decode lives in `decode`).
-    */
-  def decodeStub(df: DataFrame): DataFrame = {
-    val gifOk = expr("substring(bytes, 1, 4) = X'47494638'") // 'G','I','F','8'
-    val riffOk = expr("substring(bytes, 1, 4) = X'52494646'") // 'R','I','F','F'
-    def u16(off: Int) = // little-endian u16 from the binary column
-      (expr(s"ascii(substring(bytes, ${off + 1}, 1))") +
-        expr(s"ascii(substring(bytes, ${off + 2}, 1))") * 256).cast("int")
-    def u32(off: Int) = (u16(off) + u16(off + 2) * lit(65536)).cast("long")
-    df.withColumn(
-      "decoded",
-      struct(
-        (gifOk || riffOk).as("ok"),
-        when(gifOk, u16(6)).otherwise(lit(-1)).as("dec_width"),
-        when(gifOk, u16(8)).otherwise(lit(-1)).as("dec_height"),
-        when(riffOk, (u32(40) / (2 * AudioWindow)).cast("int"))
-          .otherwise(lit(-1))
-          .as("dec_frames")
-      )
-    )
   }
 
   /** Frame sampling: explode (asset_id, modality, frame_idx, frame_bytes)

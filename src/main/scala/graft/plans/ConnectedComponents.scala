@@ -146,28 +146,20 @@ object ConnectedComponents {
       canon(ss)
     }
 
-    val verbose = sys.env.get("GRAFT_CC_VERBOSE").contains("true")
-    def vtimed[A](name: String)(f: => A): A = {
-      val s0 = System.nanoTime()
-      val r = f
-      if (verbose) println(f"[cc] $name%-10s ${(System.nanoTime() - s0) / 1e9}%6.2f s")
-      r
-    }
-
-    var cur = vtimed("canon")(pin(canon(edges)))
-    var curSig = vtimed("sig0")(sig(cur))
+    var cur = pin(canon(edges))
+    var curSig = sig(cur)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
       // two star phases per materialization: halves the checkpoint/agg job
       // rounds (the driver-side latency floor of the loop) without changing
       // the fixpoint
-      val next = vtimed(s"round$iter")(pin(starRound(starRound(cur))))
+      val next = pin(starRound(starRound(cur)))
 
       // convergence: edge set unchanged (count + order-independent XOR
       // checksum); previous iteration's signature is reused, one agg job per
       // round
-      val nextSig = vtimed(s"sig$iter")(sig(next))
+      val nextSig = sig(next)
       converged = curSig == nextSig
       cur = next
       curSig = nextSig

@@ -81,6 +81,44 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("every registered function evaluates or fails analysis on any input type, never a task") {
+    // one row of every probe type, read back from parquet so no argument
+    // constant-folds at analysis and every kernel sees a real column
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sql-totality").toString + "/t"
+    spark.sql(
+      """SELECT array(1, 2, 3, 4) AS ai, array(1L, 2L, 3L, 4L) AS al,
+        |  array(1S, 2S, 3S, 4S) AS asi, array(1Y, 2Y, 3Y, 4Y) AS ati,
+        |  array(0.5F, -1.0F, 2.0F, 0.25F) AS af, array(0.5D, -1.0D, 2.0D, 0.25D) AS ad,
+        |  array(0.5BD, 1.5BD, 2.5BD, 3.5BD) AS adec, array('a', 'b', 'c', 'd') AS astr,
+        |  'the quick brown fox jumps over the lazy dog' AS s, 7 AS i""".stripMargin)
+      .write.parquet(tmp)
+    spark.read.parquet(tmp).createOrReplaceTempView("ext_probe")
+    val cols = Seq("ai", "al", "asi", "ati", "af", "ad", "adec", "astr", "s", "i")
+    val numeric = Seq("ai", "al", "af", "ad")
+    // (column arguments, literal tail, the column argument lists that must evaluate)
+    val calls: Map[String, (Int, String, Set[Seq[String]])] = Map(
+      "shingle_hashes" -> ((1, ", 2", Set(Seq("s")))),
+      "content_anchors" -> ((1, ", 8, 4", Set(Seq("s")))),
+      "anchor_contexts" -> ((1, ", 8, 4, 10", Set(Seq("s")))),
+      "simhash64" -> ((1, "", Set(Seq("ai"), Seq("al")))),
+      "minhash_signature" -> ((1, ", 16, 42L", Set(Seq("ai"), Seq("al")))),
+      "packed_sign_bits" -> ((1, ", 4, 8, 7L", numeric.map(Seq(_)).toSet)),
+      "sorted_intersect_size" -> ((2, "", Set(Seq("ai", "ai"), Seq("al", "al")))),
+      "cosine_sim" -> ((2, "", (for (a <- numeric; b <- numeric) yield Seq(a, b)).toSet)))
+    val registered = spark.catalog.listFunctions().collect()
+      .filter(_.className == classOf[GraftExtensions].getName).map(_.name).toSet
+    assert(registered == calls.keySet, "every registered function needs a probe row here")
+    for ((fn, (nCols, tail, accepted)) <- calls) {
+      val argLists = if (nCols == 1) cols.map(Seq(_)) else for (a <- cols; b <- cols) yield Seq(a, b)
+      val evaluated = argLists.filter { args =>
+        val q = s"SELECT $fn(${args.mkString(", ")}$tail) FROM ext_probe"
+        try { spark.sql(q).collect(); true }
+        catch { case _: org.apache.spark.sql.AnalysisException => false }
+      }.toSet
+      assert(evaluated == accepted, s"$fn evaluated on $evaluated, expected $accepted")
+    }
+  }
+
   test("non-literal scalar parameters fail with a clear analysis-time error") {
     val e = intercept[Exception] {
       spark.sql("SELECT content_anchors('abcdefgh', 1 + length('abc'), 4)").collect()

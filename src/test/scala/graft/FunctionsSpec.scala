@@ -139,6 +139,109 @@ class FunctionsSpec extends AnyFunSuite {
     assert(common.nonEmpty, "every pair must share the winnowed anchor of the common substring")
   }
 
+  /** The two winnowing kernels as they stood before they shared one pass,
+    * kept verbatim as the reference: each rolls its own hashes and runs its
+    * own sliding-minimum deque.
+    */
+  private object RefAnchors {
+    private final val B = 1000003L
+    private def mix(h: Long) = MinHashImpl.mix64(h)
+    private def hashes(str: String, width: Int): Array[Long] = {
+      val m = str.length - width + 1
+      val hs = new Array[Long](m)
+      var pow = 1L
+      var i = 0
+      while (i < width - 1) { pow *= B; i += 1 }
+      var h = 0L
+      i = 0
+      while (i < width) { h = h * B + str.charAt(i); i += 1 }
+      hs(0) = h
+      i = 1
+      while (i < m) { h = (h - str.charAt(i - 1) * pow) * B + str.charAt(i + width - 1); hs(i) = h; i += 1 }
+      hs
+    }
+    def anchors(str: String, width: Int, stride: Int): Seq[Long] = {
+      if (str.length < width) return Seq.empty
+      val hs = hashes(str, width)
+      val m = hs.length
+      if (m <= stride) return Seq(mix(hs.min))
+      val sel = new Array[Long](m - stride + 1)
+      var selN = 0
+      val deque = new Array[Int](m)
+      var head = 0; var tail = 0
+      for (i <- 0 until m) {
+        while (tail > head && hs(deque(tail - 1)) >= hs(i)) tail -= 1
+        deque(tail) = i; tail += 1
+        while (deque(head) <= i - stride) head += 1
+        if (i >= stride - 1) {
+          val v = mix(hs(deque(head)))
+          if (selN == 0 || sel(selN - 1) != v) { sel(selN) = v; selN += 1 }
+        }
+      }
+      sel.take(selN).sorted.distinct.toSeq
+    }
+    def contexts(str: String, width: Int, stride: Int, maxExtend: Int): Seq[(Long, Int, String)] = {
+      val n = str.length
+      if (n < width) return Seq.empty
+      val hs = hashes(str, width)
+      val m = hs.length
+      val sel = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
+      if (m <= stride) {
+        var mnIdx = 0
+        for (i <- 1 until m) if (hs(i) < hs(mnIdx)) mnIdx = i
+        sel += ((mix(hs(mnIdx)), mnIdx))
+      } else {
+        val deque = new Array[Int](m)
+        var head = 0; var tail = 0
+        var lastIdx = -1
+        for (i <- 0 until m) {
+          while (tail > head && hs(deque(tail - 1)) >= hs(i)) tail -= 1
+          deque(tail) = i; tail += 1
+          while (deque(head) <= i - stride) head += 1
+          if (i >= stride - 1 && deque(head) != lastIdx) {
+            lastIdx = deque(head)
+            sel += ((mix(hs(lastIdx)), lastIdx))
+          }
+        }
+      }
+      sel.sortBy(identity).toSeq.map { case (a, p) =>
+        val start = math.max(0, p - maxExtend)
+        (a, p - start, org.apache.spark.unsafe.types.UTF8String.fromString(
+          str.substring(start, math.min(n, p + width + maxExtend))).toString)
+      }
+    }
+  }
+
+  test("shared winnowing pass: anchors and anchorContexts equal the separate kernels") {
+    import graft.functions.ContentAnchorsImpl
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val gen = new scala.util.Random(13)
+    val alphabet = "abc xyz".toSeq.map(_.toString) ++ Seq("\uD83D\uDE00", "\uD83C\uDF89", "\u00E9")
+    def rand(n: Int) = (0 until n).map(_ => alphabet(gen.nextInt(alphabet.size))).mkString
+    val (width, stride) = (8, 4)
+    val fixed = Seq(
+      "", "short", "a" * 7, // n < width
+      "abcdefgh", "abcdefghij", "abcdefghijk", // m = 1, 3 and 4 <= stride
+      "abcdefghijkl", // m = stride + 1
+      "a" * 40, "ab" * 30, "abcabc" * 12, // repeated windows, equal hashes
+      "\uD83D\uDE00 emoji \uD83C\uDF89 before an anchor \uD83D\uDE00 and after")
+    val cases = fixed ++ (0 until 300).map(_ => rand(gen.nextInt(120)))
+    // failure messages name the input with escaped UTF-16 units
+    def esc(str: String) = str.flatMap(c => if (c < 128) c.toString else f"\\u${c.toInt}%04x")
+    for (str <- cases; (w, st) <- Seq((width, stride), (3, 1), (5, 16))) {
+      val u = UTF8String.fromString(str)
+      val got = ContentAnchorsImpl.anchors(u, w, st).toLongArray().toSeq
+      assert(got == RefAnchors.anchors(str, w, st), s"anchors(${esc(str)}, $w, $st)")
+      val ctx = ContentAnchorsImpl.anchorContexts(u, w, st, 10).array.toSeq.map { r =>
+        val row = r.asInstanceOf[InternalRow]
+        (row.getLong(0), row.getInt(1), row.getUTF8String(2).toString)
+      }
+      val sameContexts = ctx == RefAnchors.contexts(str, w, st, 10)
+      assert(sameContexts, s"anchorContexts(${esc(str)}, $w, $st)")
+    }
+  }
+
   test("lastToken: family-name extraction (family_name.R:6-7 parity)") {
     val df = Seq(
       ("a", "jorge luis borges"), // multi-token -> last

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Ann, DocEmbed, Multimodal, TextAnalysis}
+import graft.ops.{Ann, DocEmbed, IvfIndex, Multimodal, TextAnalysis}
 
 /** Specs for the training-pipeline extras: text analysis, ANN, multimodal. */
 class OpsSpec extends AnyFunSuite {
@@ -133,27 +133,31 @@ class OpsSpec extends AnyFunSuite {
     val queries = members.filter(_._1.endsWith("m0")).take(15).toDF("id", "vec")
     val exact = Ann.bruteForceTopK(queries, corpus, 3)
       .select(col("query_id"), col("neighbor_id")).collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val approx = Ann.ivfTopK(queries, corpus, k = 3, nCells = 12, nProbe = 3)
+    val approx = IvfIndex.topK(queries, IvfIndex.build(corpus, nCells = 12), k = 3, nProbe = 3)
       .select(col("query_id"), col("neighbor_id")).collect().map(r => (r.getString(0), r.getString(1))).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     info(f"IVF recall@3 = $recall%.3f")
     assert(recall >= 0.8, f"recall $recall%.3f")
   }
 
-  test("persisted IVF index: save/load/probe bit-identical to ivfTopK, scan pruned to probed cells") {
-    import graft.ops.IvfIndex
+  test("persisted IVF index probes like the in-memory build, scan pruned") {
     val corpus = mkVecs(240, 16, 41L).toDF("id", "vec").cache()
     val queries = mkVecs(240, 16, 41L).filter(_._1.stripPrefix("v").toInt % 60 == 0).toDF("id", "vec")
 
-    val direct = Ann.ivfTopK(queries, corpus, k = 3, nCells = 12, nProbe = 2)
+    val built = IvfIndex.build(corpus, nCells = 12)
+    val inMemory = IvfIndex.topK(queries, built, k = 3, nProbe = 2)
+    val direct = inMemory
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
+    // an in-memory handle has no partition directories to skip: its lists
+    // join as they are, with no collected cell filter
+    assert(probedCellFilter(inMemory).isEmpty, inMemory.queryExecution.analyzed.toString.take(2000))
 
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-spec").toString + "/idx"
-    IvfIndex.save(spark, IvfIndex.build(corpus, nCells = 12), path)
+    IvfIndex.save(spark, built, path)
     val loaded = IvfIndex.load(spark, path)
     val viaIndex = IvfIndex.topK(queries, loaded, k = 3, nProbe = 2)
     val got = viaIndex.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(got == direct, s"persisted probe must match direct ivfTopK; diff=${(direct -- got).take(3)} | ${(got -- direct).take(3)}")
+    assert(got == direct, s"persisted probe must match the in-memory build; diff=${(direct -- got).take(3)} | ${(got -- direct).take(3)}")
 
     // the probe's literal cell IN-filter must reach the lists scan as a
     // PARTITION filter (not a data filter): on the partitioned-by-cell
@@ -165,21 +169,20 @@ class OpsSpec extends AnyFunSuite {
 
   test("IvfIndex.add: build(half) + add(half) probes bit-identical to the monolithic " +
     "build under the same frozen centroids; pruning intact on the appended layout") {
-    import graft.ops.IvfIndex
     val corpus = mkVecs(240, 16, 43L).toDF("id", "vec").cache()
     val queries = mkVecs(240, 16, 43L).filter(_._1.stripPrefix("v").toInt % 60 == 0).toDF("id", "vec")
     // centroids trained over the FULL corpus once (the serving contract:
     // train once, add forever); lists arrive in two installments
-    val centroids = Ann.trainCentroids(corpus, nCells = 12)
+    val centroids = IvfIndex.trainCentroids(corpus, nCells = 12)
     val half1 = corpus.where(pmod(xxhash64(col("id")), lit(2)) === 0)
     val half2 = corpus.where(pmod(xxhash64(col("id")), lit(2)) === 1)
 
     val mono = IvfIndex.topK(
-      queries, IvfIndex.Handle(centroids, Ann.buildLists(corpus, centroids)), k = 3, nProbe = 2)
+      queries, IvfIndex.Handle(centroids, IvfIndex.buildLists(corpus, centroids)), k = 3, nProbe = 2)
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
 
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-add").toString + "/idx"
-    IvfIndex.save(spark, IvfIndex.Handle(centroids, Ann.buildLists(half1, centroids)), path)
+    IvfIndex.save(spark, IvfIndex.Handle(centroids, IvfIndex.buildLists(half1, centroids)), path)
     IvfIndex.add(spark, path, half2)
     val viaAdd = IvfIndex.topK(queries, IvfIndex.load(spark, path), k = 3, nProbe = 2)
     val got = viaAdd.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
@@ -191,7 +194,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("IvfIndex: an all-degenerate corpus round-trips save/load/probe/add as empty, not a crash") {
-    import graft.ops.IvfIndex
     import spark.implicits._
     // every row fails the finiteVecs gate -> no trainable dimension -> an
     // UNTRAINED index; it must still be persistable (a zero-row partitionBy
@@ -232,12 +234,12 @@ class OpsSpec extends AnyFunSuite {
     // (the layout is ALWAYS partitioned-by-cell; there is no special empty
     // layout to upgrade from)
     val corpus = mkVecs(60, 16, 9L).toDF("id", "vec").cache()
-    val centroids = Ann.trainCentroids(corpus, nCells = 4)
+    val centroids = IvfIndex.trainCentroids(corpus, nCells = 4)
     val path2 = java.nio.file.Files.createTempDirectory("graft-ivf-degen2").toString + "/idx"
-    IvfIndex.save(spark, IvfIndex.Handle(centroids, Ann.buildLists(corpus.limit(0), centroids)), path2)
+    IvfIndex.save(spark, IvfIndex.Handle(centroids, IvfIndex.buildLists(corpus.limit(0), centroids)), path2)
     assert(IvfIndex.topK(probes, IvfIndex.load(spark, path2), k = 3, nProbe = 2).count() == 0)
     IvfIndex.add(spark, path2, corpus)
-    val mono = IvfIndex.topK(probes, IvfIndex.Handle(centroids, Ann.buildLists(corpus, centroids)),
+    val mono = IvfIndex.topK(probes, IvfIndex.Handle(centroids, IvfIndex.buildLists(corpus, centroids)),
       k = 3, nProbe = 2)
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
     val got = IvfIndex.topK(probes, IvfIndex.load(spark, path2), k = 3, nProbe = 2)
@@ -247,16 +249,128 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("IvfIndex: an index saved without the lists_schema sidecar is refused, not migrated") {
-    import graft.ops.IvfIndex
     val corpus = mkVecs(60, 16, 9L).toDF("id", "vec").cache()
-    val centroids = Ann.trainCentroids(corpus, nCells = 4)
+    val centroids = IvfIndex.trainCentroids(corpus, nCells = 4)
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-nosidecar").toString + "/idx"
-    IvfIndex.save(spark, IvfIndex.Handle(centroids, Ann.buildLists(corpus.limit(0), centroids)), path)
+    IvfIndex.save(spark, IvfIndex.Handle(centroids, IvfIndex.buildLists(corpus.limit(0), centroids)), path)
     val sc = new org.apache.hadoop.fs.Path(s"$path/lists_schema")
     assert(sc.getFileSystem(spark.sessionState.newHadoopConf()).delete(sc, true))
     val e = intercept[IllegalArgumentException](IvfIndex.load(spark, path))
     assert(e.getMessage.contains("rebuild the index"), e.getMessage)
     intercept[IllegalArgumentException](IvfIndex.add(spark, path, corpus))
+  }
+
+  /** The literal cell set `IvfIndex.topK` filtered the lists by, if it
+    * filtered them (an `In` over the `cell` column in the analyzed plan).
+    */
+  private def probedCellFilter(df: org.apache.spark.sql.DataFrame): Option[Set[Int]] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, Literal}
+    df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case In(a: AttributeReference, lits) if a.name == "cell" && lits.forall(_.isInstanceOf[Literal]) =>
+        lits.map(_.asInstanceOf[Literal].value.asInstanceOf[Int]).toSet
+    })).headOption
+  }
+
+  /** The Lloyd loop `IvfIndex.trainCentroids` replaced, kept verbatim as the
+    * reference: nearest centroid by a broadcast crossJoin, an
+    * `aggregate(zip_with(...))` distance and a `groupBy(id)` argmin.
+    */
+  private def referenceCentroids(corpus: org.apache.spark.sql.DataFrame, nCells: Int,
+      seed: Long = 42L, iters: Int = 5, sampleCap: Int = 100000): Array[Array[Double]] = {
+    val quant = transform(col("vec"), x => {
+      val d = x.cast("double")
+      when(isnan(d) || abs(d) > lit(9.0e15), lit(0L)).otherwise(round(d * 1000).cast("long"))
+    })
+    val dimRow = corpus
+      .where(col("vec").isNotNull &&
+        !exists(col("vec"), v => v.isNull || isnan(v) || abs(v.cast("double")) > lit(Float.MaxValue.toDouble)))
+      .groupBy(size(col("vec")).as("sz")).agg(count(lit(1)).as("cnt"))
+      .where(col("sz") >= 1).orderBy(col("cnt").desc, col("sz").asc).limit(1).collect()
+    if (dimRow.isEmpty) return Array.empty
+    val wf = Ann.finiteVecs(corpus, "vec", dimRow(0).getAs[Int]("sz"))
+    val n = wf.count()
+    if (n == 0) return Array.empty
+    val keepPerM = if (n <= sampleCap) 1000000L else math.max(1L, sampleCap * 1000000L / n)
+    val sample = wf.where(pmod(xxhash64(col("id"), lit(seed)), lit(1000000L)) < keepPerM)
+      .select(col("id"), quant.as("qv")).cache()
+    var centroids: Array[Array[Double]] = sample
+      .orderBy(xxhash64(col("id"), lit(seed + 1)), col("id")).limit(nCells).select(col("qv"))
+      .collect().map(_.getSeq[Long](0).map(_.toDouble).toArray)
+    for (_ <- 0 until iters) {
+      val centDf = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "centroid")
+      val dist = aggregate(
+        zip_with(col("qv"), col("centroid"), (x, cc) => (x.cast("double") - cc) * (x.cast("double") - cc)),
+        lit(0.0), (s, x) => s + x)
+      val sums = sample.crossJoin(broadcast(centDf))
+        .select(col("id"), col("qv"), struct(dist.as("dist"), col("cell").as("cell")).as("dc"))
+        .groupBy(col("id")).agg(min(col("dc")).as("m"), first(col("qv")).as("v"))
+        .select(col("m.cell").as("cell"), posexplode(col("v")).as(Seq("d", "v")))
+        .groupBy(col("cell"), col("d")).agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
+        .collect()
+      val next = centroids.map(_.clone())
+      sums.foreach { r =>
+        next(r.getAs[Int]("cell"))(r.getAs[Int]("d")) = r.getAs[Long]("s").toDouble / r.getAs[Long]("c")
+      }
+      centroids = next
+    }
+    sample.unpersist()
+    centroids
+  }
+
+  test("IvfIndex.trainCentroids equals the crossJoin/HOF Lloyd loop to the exact double") {
+    def bits(c: Array[Array[Double]]) = c.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+    val centers = mkVecs(10, 16, 61L)
+    val clustered = centers.zipWithIndex.flatMap { case ((_, c), ci) =>
+      (0 until 12).map { m =>
+        (s"c${ci}m$m", c.zipWithIndex.map { case (x, d) =>
+          x + (java.lang.Long.remainderUnsigned(
+            graft.functions.MinHashImpl.mix64(877L + ci * 37L + m * 11L + d), 100) / 2000.0f - 0.025f)
+        })
+      }
+    }.toDF("id", "vec").cache()
+    // repeated vectors under distinct ids: equal centroids and equal
+    // distances, so every assignment is a tie the rule must break alike
+    val ties = (0 until 60).map(i => (s"t$i", mkVecs(4, 8, 5L)(i % 4)._2)).toDF("id", "vec").cache()
+    for ((corpus, nCells, sampleCap) <- Seq((clustered, 4, 100000), (clustered, 12, 100000),
+        (clustered, 12, 50), (ties, 2, 100000), (ties, 3, 100000), (ties, 5, 100000))) {
+      val got = IvfIndex.trainCentroids(corpus, nCells, sampleCap = sampleCap)
+      assert(got.nonEmpty)
+      assert(bits(got) == bits(referenceCentroids(corpus, nCells, sampleCap = sampleCap)),
+        s"centroids moved at nCells=$nCells sampleCap=$sampleCap")
+    }
+  }
+
+  test("loaded IvfIndex probe ignores malformed queries: same answers, same pruned cells") {
+    val corpus = mkVecs(240, 16, 47L).toDF("id", "vec").cache()
+    val good = mkVecs(240, 16, 47L).filter(_._1.stripPrefix("v").toInt % 100 == 0)
+    val bad = Seq(
+      ("nan", Float.NaN +: Seq.fill(15)(0.9f)),
+      ("short", Seq.fill(8)(-0.9f)),
+      ("null", null.asInstanceOf[Seq[Float]]))
+    val h = IvfIndex.build(corpus, nCells = 12)
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-malformed").toString + "/idx"
+    IvfIndex.save(spark, h, path)
+    val loaded = IvfIndex.load(spark, path)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSet
+    val clean = IvfIndex.topK(good.toDF("id", "vec"), loaded, k = 3, nProbe = 2)
+    val mixed = IvfIndex.topK((good ++ bad).toDF("id", "vec"), loaded, k = 3, nProbe = 2)
+    assert(rows(mixed) == rows(clean) && rows(clean).nonEmpty)
+
+    // the cells each well-formed query probes, derived here from the
+    // trained centroids: within the nProbe-th smallest squared distance to
+    // the milli-quantized vector
+    val expected = good.flatMap { case (_, v) =>
+      val q = v.map(x => BigDecimal(x.toDouble * 1000).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      val ds = h.centroids.map(c => q.zip(c).foldLeft(0.0) { case (s, (a, b)) => s + (a - b) * (a - b) })
+      val kth = ds.sorted.apply(1)
+      ds.indices.filter(ds(_) <= kth)
+    }.toSet
+    assert(probedCellFilter(clean).contains(expected))
+    assert(probedCellFilter(mixed).contains(expected),
+      s"pruned cells ${probedCellFilter(mixed)} must be the well-formed queries' cells $expected")
+    val plan = mixed.queryExecution.executedPlan.toString
+    assert("""PartitionFilters: \[[^\]]*cell""".r.findFirstIn(plan).isDefined, plan.take(2000))
   }
 
   test("embedding near-dup pairs finds planted duplicates") {
@@ -297,15 +411,6 @@ class OpsSpec extends AnyFunSuite {
       col("decoded.dec_sample_rate") =!= col("sample_rate")).count() == 0)
     assert(d.where(col("modality") === "audio" && col("decoded.dec_rms") <= 0).count() == 0)
     assert(d.where(col("modality") =!= "audio" && col("decoded.dec_sample_rate") =!= -1).count() == 0)
-    // the header-only stub seam parses BOTH real container headers (RIFF
-    // audio, GIF video) with pure built-ins: audio window counts and video
-    // logical-screen dims agree with the metadata; GIF headers carry no
-    // frame count, so the stub honestly reports -1 there
-    val s = Multimodal.decodeStub(a.where(col("modality") =!= "image")).cache()
-    assert(s.where(!col("decoded.ok")).count() == 0, "all headers must parse")
-    assert(s.where(col("modality") === "audio" && col("decoded.dec_frames") =!= col("n_frames")).count() == 0)
-    assert(s.where(col("modality") === "video" &&
-      (col("decoded.dec_width") =!= col("width") || col("decoded.dec_frames") =!= -1)).count() == 0)
   }
 
   test("a hand-built animated GIF decodes to its exact frame sequence; corrupt bytes fail soft") {
@@ -430,7 +535,7 @@ class OpsSpec extends AnyFunSuite {
     val corpus = members.toDF("id", "vec")
     val queries = members.take(10).toDF("id", "vec")
     def runAt(parts: Int): Set[(String, String, Int)] =
-      Ann.ivfTopK(queries.repartition(parts), corpus.repartition(parts), k = 3, nCells = 8, nProbe = 2)
+      IvfIndex.topK(queries.repartition(parts), IvfIndex.build(corpus.repartition(parts), nCells = 8), k = 3, nProbe = 2)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
         .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
     assert(runAt(1) == runAt(7), "quantizer/index must be partition-order independent")
@@ -576,7 +681,7 @@ class OpsSpec extends AnyFunSuite {
     val queries = vecs.where(!col("id").endsWith("_dup")).limit(10)
     val exact = Ann.bruteForceTopK(queries, vecs, 3)
       .select(col("query_id"), col("neighbor_id")).collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val approx = Ann.ivfTopK(queries, vecs, k = 3, nCells = 6, nProbe = 3)
+    val approx = IvfIndex.topK(queries, IvfIndex.build(vecs, nCells = 6), k = 3, nProbe = 3)
       .select(col("query_id"), col("neighbor_id")).collect().map(r => (r.getString(0), r.getString(1))).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     info(f"text->embedding->IVF recall@3 = $recall%.3f")
